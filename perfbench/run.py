@@ -21,6 +21,7 @@ The last stdout line is ``{"correct", "attempted", "failed", "metrics"}``;
 the full record (host fingerprint, every repetition, checks, spans) goes to
 ``.perfbench/records/``.  Checkpoints, the round-trip parquet and Spark's
 local dirs live in a per-run directory under ``.perfbench/`` removed at exit.
+Before it exits, a run waits until every process it started has ended.
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ import json
 import os
 import platform
 import shutil
+import signal
 import statistics
 import subprocess
 import sys
@@ -43,7 +45,7 @@ RECORDS = os.path.join(WORK, "records")
 SETUP_REPS = 3
 # the keys of workloads.WORKLOADS, listed here so that argument parsing does
 # not import the package
-WORKLOAD_NAMES = ("codegraph", "linkgraph", "dedup")
+WORKLOAD_NAMES = ("codegraph", "linkgraph")
 
 #: end-to-end metrics (untraced runs): name -> unit
 END_TO_END = {"pipeline_s": "s", "setup_s": "s"}
@@ -174,7 +176,8 @@ def measure(args, host: dict, tmp: str) -> dict:
     session_s = tracer.busy("session", 0)
     try:
         tracer.attach(spark)
-        ctx = Ctx(spark, args.seed, SIZES[args.scale][args.workload], tmp, tracer)
+        sizes = SIZES[args.scale]
+        ctx = Ctx(spark, args.seed, sizes, tmp, tracer)
         fills = []
         for i in range(SETUP_REPS):
             t0 = time.perf_counter()
@@ -222,7 +225,7 @@ def measure(args, host: dict, tmp: str) -> dict:
             "scale": args.scale,
             "trace": args.trace,
             "host": host,
-            "sizes": ctx.sizes,
+            "sizes": {p.name: sizes[p.name] for p in wl.parts},
             "session_s": session_s,
             "setup_fill_s": fills,
             "setup_s": session_s + statistics.median(fills),
@@ -248,14 +251,75 @@ def measure(args, host: dict, tmp: str) -> dict:
             jvm_pid = sc._jvm.java.lang.ProcessHandle.current().pid()
             lm["session.driver_hwm_mb"] = _vm_hwm_mb(jvm_pid)
             lm["session.live_caches_end"] = sc._jsc.getPersistentRDDs().size()
-            lm["plans.yearly.jobs_per_year"] = lm["plans.yearly.jobs"] / ctx.sizes.get(
-                "n_years", 1
+            lm["plans.yearly.jobs_per_year"] = (
+                lm["plans.yearly.jobs"] / sizes["linkgraph"]["n_years"]
             )
             record["layers"] = lm
             record["n_jobs"] = len(jobs)
         return record
     finally:
         spark.stop()
+
+
+def become_subreaper() -> None:
+    """Have orphaned descendants re-parented to this process.  Spark's Python
+    worker daemon leaves the JVM's process group and can outlive the JVM;
+    as a subreaper this process can still wait for it."""
+    import ctypes
+
+    PR_SET_CHILD_SUBREAPER = 36
+    prctl = ctypes.CDLL(None, use_errno=True).prctl
+    prctl.argtypes = [ctypes.c_int] + [ctypes.c_ulong] * 4
+    prctl.restype = ctypes.c_int
+    if prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        err = ctypes.get_errno()
+        raise OSError(err, os.strerror(err))
+
+
+def _descendants(root: int) -> list[int]:
+    kids: dict[int, list[int]] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue
+        kids.setdefault(ppid, []).append(int(d))
+    out, todo = [], list(kids.get(root, ()))
+    while todo:
+        pid = todo.pop()
+        out.append(pid)
+        todo += kids.get(pid, ())
+    return out
+
+
+def stop_processes(grace_s: float = 60.0) -> None:
+    """End the Spark JVM and wait until every process this run started has
+    ended; whatever outlives ``grace_s`` is killed.  The JVM exits when its
+    stdin closes, which otherwise happens only as this process exits, so the
+    JVM would still be running after the benchmark returned."""
+    from pyspark import SparkContext
+
+    proc = getattr(SparkContext._gateway, "proc", None)
+    if proc is not None and proc.stdin is not None:
+        proc.stdin.close()
+    deadline = time.monotonic() + grace_s
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            break
+        if pid:
+            continue
+        if time.monotonic() > deadline:
+            for p in _descendants(os.getpid()):
+                try:
+                    os.kill(p, signal.SIGKILL)
+                except ProcessLookupError:
+                    pass
+        time.sleep(0.02)
 
 
 def _vm_hwm_mb(pid: int) -> float:
@@ -303,6 +367,9 @@ def main(argv=None) -> int:
     import graph_computing_go_spark  # noqa: F401  (fails fast without the package)
 
     host = host_fingerprint()
+    become_subreaper()
+    # a terminated run still stops the JVM and removes its temp directory
+    signal.signal(signal.SIGTERM, lambda signum, frame: sys.exit(128 + signum))
     os.makedirs(RECORDS, exist_ok=True)
     if args.trace and not untraced_pipeline_s(args):
         run_untraced_twin(args)
@@ -315,6 +382,7 @@ def main(argv=None) -> int:
     try:
         record = measure(args, host, tmp)
     finally:
+        stop_processes()
         shutil.rmtree(tmp, ignore_errors=True)
     stamp = time.strftime("%Y%m%dT%H%M%S")
     name = f"{args.workload}-{args.scale}-t{args.trace}-s{args.seed}-{stamp}-{os.getpid()}"
