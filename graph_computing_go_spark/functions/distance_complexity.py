@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_computing_go_spark.operators.graph import global_row_number
-from graph_computing_go_spark.session import eager_results, is_cached
+from graph_computing_go_spark.session import compute_once, eager_results, is_cached
 
 
 def _canonical(wedges: DataFrame, group: list[str]) -> DataFrame:
@@ -118,17 +118,15 @@ def _with_copies(wedges: DataFrame, categories: DataFrame, group: list[str]):
         # number of (year, discipline) keys, never by graph size), so
         # broadcasting is safe and saves a shuffle of the ranked copies;
         # the no-vertex-grain-broadcast invariant does not apply
-        copies = (
-            ranked.join(F.broadcast(max_df), list(group))
-            .withColumn("copy_id", F.col("__max_id") + F.col("__rn"))
-            .drop("__max_id", "__rn")
-        )
+        copies = ranked.join(F.broadcast(max_df), list(group))
     else:
-        copies = (
-            ranked.crossJoin(F.broadcast(max_df))
-            .withColumn("copy_id", F.col("__max_id") + F.col("__rn"))
-            .drop("__max_id", "__rn")
+        copies = ranked.crossJoin(F.broadcast(max_df))
+    # copies feeds the node table AND the copy edges: ranked once
+    copies = compute_once(
+        copies.withColumn("copy_id", F.col("__max_id") + F.col("__rn")).drop(
+            "__max_id", "__rn"
         )
+    )
     node_cat = categories.select(
         *group, "id", F.element_at("cats", 1).alias("cat")
     ).unionByName(copies.select(*group, F.col("copy_id").alias("id"), "cat"))
@@ -242,7 +240,8 @@ def distance_complexity(
         *group,
         "id",
     ).cache()
-    tagged = (
+    # tagged feeds the intra AND cross aggregations
+    tagged = compute_once(
         e.join(
             nc.select(*group, F.col("id").alias("a"), F.col("cat").alias("cat_a")),
             [*group, "a"],
@@ -250,7 +249,7 @@ def distance_complexity(
             nc.select(*group, F.col("id").alias("b"), F.col("cat").alias("cat_b")),
             [*group, "b"],
         )
-    ).cache()
+    )
 
     intra = tagged.filter(F.col("cat_a") == F.col("cat_b"))
     intra_incident = intra.select(
@@ -276,37 +275,35 @@ def distance_complexity(
         .groupBy(*group, "cat")
         .agg(F.sum("w").alias("outer"))
     )
-    # vall = 2*sum(all w) = sum(inner over modules) + sum(outer over ALL
-    # modules): every intra edge's 2w lands in exactly one module's inner,
-    # every cross edge's w lands in both its endpoints' outer — so vall
-    # folds out of the two aggregates already computed instead of a third
-    # full scan + exchange of the tagged edge cache.  The full join keeps
-    # cross-only groups (no intra edge anywhere): their little row is
-    # dropped later exactly as before (h_module has no row to join).
-    vi = h_module.groupBy(*group).agg(F.sum("inner").alias("__vi"))
-    vo = outer.groupBy(*group).agg(F.sum("outer").alias("__vo"))
-    vall = (vi.join(vo, list(group), "full") if group else vi.crossJoin(vo)).select(
-        *group,
+    # every module with an intra OR a cross edge, each aggregate consumed
+    # ONCE.  vall = 2*sum(all w) = sum(inner) + sum(outer) over ALL modules
+    # (every intra edge's 2w lands in exactly one module's inner, every
+    # cross edge's w in both its endpoints' outer), and with vall pulled
+    # out of the per-module terms
+    #   little = (sum h*inner - sum outer*log2(inner) + log2(vall)*sum outer) / vall
+    # over the modules WITH intra edges (cross-only modules are dropped,
+    # :195) — so vall and little come out of ONE aggregation per group
+    # instead of a module-sum pass, a join back and a second pass.  A group
+    # with no intra edge at all gets a NULL little, as before.
+    mods = h_module.join(outer, [*group, "cat"], "full").select(
+        *group, "h_module", "inner", F.coalesce("outer", F.lit(0.0)).alias("outer")
+    )
+    has_inner = F.col("inner").isNotNull()
+    sums = mods.groupBy(*group).agg(
+        F.sum(F.col("h_module") * F.col("inner")).alias("__hi"),
+        F.sum(F.when(has_inner, F.col("outer") * F.log2("inner"))).alias("__oli"),
+        F.sum(F.when(has_inner, F.col("outer"))).alias("__oi"),
         (
-            F.coalesce("__vi", F.lit(0.0)) + F.coalesce("__vo", F.lit(0.0))
+            F.coalesce(F.sum("inner"), F.lit(0.0)) + F.sum("outer")
         ).alias("vall"),
     )
-    per_mod = h_module.join(outer, [*group, "cat"], "left")
-    if group:
-        # group-grain (one row per work key) — broadcast, same as max_df
-        per_mod = per_mod.join(F.broadcast(vall), list(group))
-    else:
-        per_mod = per_mod.crossJoin(F.broadcast(vall))
-    per_mod = per_mod.select(
+    little = sums.select(
         *group,
         (
-            F.col("h_module") * F.col("inner") / F.col("vall")
-            - F.log2(F.col("inner") / F.col("vall"))
-            * F.coalesce("outer", F.lit(0.0))
+            (F.col("__hi") - F.col("__oli") + F.log2("vall") * F.col("__oi"))
             / F.col("vall")
-        ).alias("term"),
+        ).alias("little"),
     )
-    little = per_mod.groupBy(*group).agg(F.sum("term").alias("little"))
     if group:
         out = big.join(little, list(group), "left").select(
             *group, "big", "little"
@@ -314,13 +311,12 @@ def distance_complexity(
     else:
         out = big.crossJoin(little)
     # one row per group: localCheckpoint is a trivially small materialization
-    # and lets both internal caches retire NOW instead of accreting across a
+    # and lets the internal caches retire NOW instead of accreting across a
     # 50-query driver session (the conftest driver-memory bump this module's
     # family forced is exactly that accretion); SPARK_GRAFT_EAGER=0 keeps it
     # lazy for the plan audit
     if eager_results():
         out = out.localCheckpoint()
-        tagged.unpersist()
         nc.unpersist()
         if not cats_preowned:
             categories.unpersist()

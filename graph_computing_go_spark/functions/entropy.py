@@ -120,24 +120,44 @@ def degree_distribution_entropy(
     nodes (lab/test.ipynb cell 1: ``in_data[len(obj['i'])] += 1`` vs
     ``if cache > 0``).
     """
-    deg = degrees(edges, vertices)
-
-    def hist_h(col: str, drop_zero: bool) -> DataFrame:
-        d = deg.filter(F.col(col) > 0) if drop_zero else deg
-        hist = d.groupBy(col).agg(F.count("*").alias("c"))
-        return hist.agg(
+    # ONE consumer of the degree table: every kind's histogram comes out of
+    # one grouped aggregation over a (kind, degree) explode, so deg's two
+    # aggregations and full outer join run once rather than once per kind
+    # (AQE never reuses their exchanges above a caller-cached edge table)
+    kd = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(k).alias("kind"), F.col(f"{k}_deg").alias("d"))
+                for k in ("in", "out", "all")
+            ]
+        )
+    )
+    per = (
+        degrees(edges, vertices)
+        .select(kd.alias("__kd"))
+        .select("__kd.kind", "__kd.d")
+        # h_all drops the total-degree-0 bucket; h_in/h_out keep theirs
+        .filter((F.col("kind") != "all") | (F.col("d") > 0))
+        .groupBy("kind", "d")
+        .agg(F.count("*").alias("c"))
+        .groupBy("kind")
+        .agg(
             _hist_entropy(
                 F.sum(F.col("c") * F.log2("c")), F.sum("c").cast("double")
             ).alias("h"),
             F.sum("c").alias("n"),
         )
-
-    h_in = hist_h("in_deg", False).select(F.col("h").alias("h_in"))
-    h_out = hist_h("out_deg", False).select(F.col("h").alias("h_out"))
-    h_all = hist_h("all_deg", True).select(
-        F.col("h").alias("h_all"), F.col("n").alias("n_nodes")
     )
-    return h_in.crossJoin(h_out).crossJoin(h_all)
+
+    def of_kind(col: str, kind: str) -> Column:
+        return F.max(F.when(F.col("kind") == kind, F.col(col)))
+
+    return per.agg(
+        of_kind("h", "in").alias("h_in"),
+        of_kind("h", "out").alias("h_out"),
+        of_kind("h", "all").alias("h_all"),
+        of_kind("n", "all").alias("n_nodes"),
+    )
 
 
 def structural_entropy(
@@ -150,24 +170,24 @@ def structural_entropy(
     matches the mongo result docs (entropyin / normalizeentropyin / nodecount
     / nodeincount read back in lab/degree_distruction_entropy.ipynb).
     """
-    deg = degrees(edges, vertices)
+    # ONE global aggregation over the degree table, each kind's sums
+    # restricted to its degree >= 1 nodes: deg's two aggregations and full
+    # outer join run once instead of once per kind
+    cols = []
+    for k in ("in", "out", "all"):
+        d = F.when(F.col(f"{k}_deg") > 0, F.col(f"{k}_deg").cast("double"))
+        cols += [
+            F.sum(d).alias(f"S_{k}"),
+            F.sum(d * F.log2(d)).alias(f"dlogd_{k}"),
+            F.count(d).alias(f"n_{k}"),
+        ]
+    agg = degrees(edges, vertices).agg(*cols)
 
-    def one(col: str, suffix: str) -> DataFrame:
-        d = deg.filter(F.col(col) > 0).select(F.col(col).cast("double").alias("d"))
-        agg = d.agg(
-            F.sum("d").alias("S"),
-            F.sum(F.col("d") * F.log2("d")).alias("dlogd"),
-            F.count("*").alias("n"),
-        )
-        h = F.log2(F.col("S")) - F.col("dlogd") / F.col("S")
-        e_min = F.log2(4.0 * (F.col("n") - 1)) / 2.0
-        norm = (h - e_min) / (F.log2(F.col("n").cast("double")) - e_min)
-        return agg.select(
-            h.alias(f"h_{suffix}"),
-            norm.alias(f"norm_{suffix}"),
-            F.col("n").alias(f"n_{suffix}"),
-        )
+    def one(k: str) -> list[Column]:
+        S, n = F.col(f"S_{k}"), F.col(f"n_{k}")
+        h = F.log2(S) - F.col(f"dlogd_{k}") / S
+        e_min = F.log2(4.0 * (n - 1)) / 2.0
+        norm = (h - e_min) / (F.log2(n.cast("double")) - e_min)
+        return [h.alias(f"h_{k}"), norm.alias(f"norm_{k}"), n.alias(f"n_{k}")]
 
-    return (
-        one("in_deg", "in").crossJoin(one("out_deg", "out")).crossJoin(one("all_deg", "all"))
-    )
+    return agg.select(*one("in"), *one("out"), *one("all"))

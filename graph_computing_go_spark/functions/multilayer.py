@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_computing_go_spark.operators.graph import global_row_number
-from graph_computing_go_spark.session import eager_results
+from graph_computing_go_spark.session import compute_once, eager_results
 
 
 def _expanded_graph(vertices: DataFrame, edges: DataFrame):
@@ -53,8 +53,9 @@ def _expanded_graph(vertices: DataFrame, edges: DataFrame):
     # fresh ids via the range-partitioned global rank (same (id, pos) asc
     # ordering the old global window gave, so assigned ids — and therefore
     # goldens — are bit-identical), never a single-partition window: a
-    # taxonomy where most vertices carry 2+ categories makes this data-sized
-    copies = (
+    # taxonomy where most vertices carry 2+ categories makes this data-sized.
+    # copies feeds the node table AND both sides' copy lists: ranked once
+    copies = compute_once(
         global_row_number(
             multi.select("id", F.posexplode("cats").alias("pos", "cat")).filter(
                 F.col("pos") >= 1
@@ -133,7 +134,8 @@ def multilayer_structural_entropy(
     ``edges``: (src, dst) — out-lists already normalized to one row per edge.
     """
     nodes, e_full = _expanded_graph(vertices, edges)
-    e_full = e_full.cache()
+    # e_full feeds the whole-graph entropy AND the tag joins
+    e_full = compute_once(e_full)
 
     big = _in_entropy(e_full, []).select(F.col("h").alias("big"))
 
@@ -142,22 +144,21 @@ def multilayer_structural_entropy(
     # Cache it pre-partitioned on the join key (its lineage contains the
     # whole copy/row-number machinery, which would otherwise re-execute per
     # tag join; alias-aware output partitioning carries hash(id) through
-    # both the src and dst renames — same shape as distance_complexity).
+    # both the src and dst renames, so neither probe shuffles it — same
+    # shape as distance_complexity).
     n = nodes.repartition(
         int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
         "id",
     ).cache()
-    # tagged feeds the intra AND cross aggregations — cache it, or the two
-    # vertex-grain joins execute once per consumer
-    tagged = (
+    # tagged feeds the intra AND cross aggregations
+    tagged = compute_once(
         e_full.join(n.select(F.col("id").alias("src"), F.col("cat").alias("cat_src")), "src")
         .join(n.select(F.col("id").alias("dst"), F.col("cat").alias("cat_dst")), "dst")
-    ).cache()
+    )
 
     intra = tagged.filter(F.col("cat_src") == F.col("cat_dst"))
     # h AND vol from ONE aggregation chain: vol_j (intra edge count) is the
-    # sum of module-j in-degrees, which _in_entropy already computes as S —
-    # the separate mod_vol count + module-key join were pure re-scans
+    # sum of module-j in-degrees, which _in_entropy already computes as S
     mod = _in_entropy(intra.withColumnRenamed("cat_src", "cat"), ["cat"]).select(
         "cat", "h", F.col("S").alias("vol")
     )
@@ -166,38 +167,34 @@ def multilayer_structural_entropy(
         .groupBy(F.col("cat_src").alias("cat"))
         .agg(F.count("*").cast("double").alias("g"))
     )
-    # m = |E'| = sum(vol) + sum(g): every expanded edge is either intra
-    # (lands in exactly one module's vol) or cross (counted once, by its
-    # src module, in g) — no third scan of the tagged cache needed
-    totals = (
-        mod.agg(F.sum("vol").alias("__mv"))
-        .crossJoin(mod_g.agg(F.sum("g").alias("__mg")))
-        .select(
-            (
-                F.coalesce("__mv", F.lit(0.0)) + F.coalesce("__mg", F.lit(0.0))
-            ).alias("m")
-        )
+    # every module with an intra OR a cross edge, each aggregate consumed
+    # ONCE: m = |E'| = sum(vol) + sum(g) (every expanded edge is intra in
+    # exactly one module or cross, counted once by its src module), and
+    # with m pulled out of the per-module terms
+    #   little = (sum h*vol - sum g*log2(vol) + log2(m)*sum g) / m
+    # over the modules with vol (entropy.go:155-157 skips vol = 0), so m
+    # and little come out of ONE aggregation over the joined modules
+    mods = mod.join(mod_g, "cat", "full").select(
+        "h", "vol", F.coalesce("g", F.lit(0.0)).alias("g")
     )
-    per_mod = (
-        mod.join(mod_g, "cat", "left")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            (
-                F.col("h") * F.col("vol") / F.col("m")
-                - F.log2(F.col("vol") / F.col("m"))
-                * F.coalesce("g", F.lit(0.0))
-                / F.col("m")
-            ).alias("term")
-        )
+    has_vol = F.col("vol").isNotNull()
+    sums = mods.agg(
+        F.sum(F.col("h") * F.col("vol")).alias("__hv"),
+        F.sum(F.when(has_vol, F.col("g") * F.log2("vol"))).alias("__glv"),
+        F.sum(F.when(has_vol, F.col("g"))).alias("__gv"),
+        (F.coalesce(F.sum("vol"), F.lit(0.0)) + F.sum("g")).alias("m"),
     )
-    little = per_mod.agg(F.sum("term").alias("little"))
-    # one-row scalar result: materialize so the expanded-graph cache retires
-    # with the call instead of accreting across a 50-query driver session
+    little = sums.select(
+        (
+            (F.col("__hv") - F.col("__glv") + F.log2("m") * F.col("__gv"))
+            / F.col("m")
+        ).alias("little")
+    )
+    # one-row scalar result: materialize so the vertex cache retires with
+    # the call instead of accreting across a 50-query driver session
     # (SPARK_GRAFT_EAGER=0 keeps it lazy for the plan audit)
     out = big.crossJoin(little)
     if eager_results():
         out = out.localCheckpoint()
-        tagged.unpersist()
         n.unpersist()
-        e_full.unpersist()
     return out

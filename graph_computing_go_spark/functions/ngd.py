@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_computing_go_spark.session import compute_once
+
 
 def google_distance(
     edges: DataFrame,
@@ -56,7 +58,8 @@ def google_distance(
     core = core_vertices.select("id").distinct()
     # the core set is bounded by construction (top-k slice / subject tag
     # whitelist) — broadcasting it is safe and skips a shuffle
-    inedges = (
+    # inedges feeds the in-degrees and both sides of the co-occurrence join
+    inedges = compute_once(
         edges.join(F.broadcast(core).withColumnRenamed("id", "dst"), "dst", "left_semi")
         .select("src", "dst")
         .distinct()

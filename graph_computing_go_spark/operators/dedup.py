@@ -26,10 +26,11 @@ generated pairs each, exactly like the NGD hub grid (functions/ngd.py:81-115).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graph_computing_go_spark.operators.text import tokens_col
+from graph_computing_go_spark.session import compute_once
 
 
 def exact_dedup(
@@ -209,41 +210,49 @@ def grid_self_pairs(
     ``{c}_a`` / ``{c}_b``.
     """
     payload = [c for c in df.columns if c not in key_cols]
-    fan = df.groupBy(*key_cols).agg(
-        F.ceil(F.count("*") / F.lit(chunk)).cast("int").alias("__m")
-    )
-    e = df.join(fan, list(key_cols)).withColumn(
-        "__bkt", F.pmod(F.xxhash64(id_col), F.col("__m")).cast("int")
-    )
-    grid = e.withColumn(
-        "__x", F.explode(F.sequence(F.lit(0), F.col("__m") - 1))
-    ).select(
-        *key_cols,
-        F.least("__bkt", "__x").alias("__gi"),
-        F.greatest("__bkt", "__x").alias("__gj"),
-        "__bkt",
-        *payload,
-    )
-    l = grid.select(
-        *key_cols, "__gi", "__gj", F.col("__bkt").alias("__ba"),
-        *[F.col(c).alias(f"{c}_a") for c in payload],
-    )
-    r = grid.select(
-        *key_cols, "__gi", "__gj", F.col("__bkt").alias("__bb"),
-        *[F.col(c).alias(f"{c}_b") for c in payload],
+    # the group size comes from a window over the key, not a count
+    # aggregate joined back: ``df`` then has ONE consumer, so its lineage
+    # (e.g. the MinHash band table) runs once.  ``e`` feeds both join
+    # sides, so it is computed once for the two of them.
+    m = F.ceil(
+        F.count("*").over(Window.partitionBy(*key_cols)) / F.lit(chunk)
+    ).cast("int")
+    e = compute_once(
+        df.withColumn("__m", m).withColumn(
+            "__bkt", F.pmod(F.xxhash64(id_col), F.col("__m")).cast("int")
+        )
     )
     # explicit repartition on the join key: the join's INPUT is tiny relative
     # to its pair OUTPUT (~(2·chunk)× amplification), so AQE's input-size
     # coalescing would funnel many grid subgroups into a handful of tasks —
-    # a user-specified repartition is never coalesced, and the join reuses
-    # its partitioning (no extra exchange)
+    # a user-specified repartition is never coalesced.  Both join sides are
+    # projections ABOVE this one exchange, so it runs once (AQE reuses it)
+    # and the join keeps its partitioning (no further exchange).
     jk = [*key_cols, "__gi", "__gj"]
     n_parts = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
+    grid = (
+        e.withColumn("__x", F.explode(F.sequence(F.lit(0), F.col("__m") - 1)))
+        .select(
+            *key_cols,
+            F.least("__bkt", "__x").alias("__gi"),
+            F.greatest("__bkt", "__x").alias("__gj"),
+            "__bkt",
+            *payload,
+        )
+        .repartition(n_parts, *jk)
+    )
+    l = grid.select(
+        *jk, F.col("__bkt").alias("__ba"),
+        *[F.col(c).alias(f"{c}_a") for c in payload],
+    )
+    r = grid.select(
+        *jk, F.col("__bkt").alias("__bb"),
+        *[F.col(c).alias(f"{c}_b") for c in payload],
+    )
     return (
-        l.repartition(n_parts, *jk)
-        .join(r.repartition(n_parts, *jk), jk)
+        l.join(r, jk)
         .filter(
             (F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
             & (F.col("__gi") == F.least("__ba", "__bb"))
@@ -272,7 +281,8 @@ def minhash_lsh_candidates(
     shingle-grain exchange — the band table's groupBy(id) partial-
     aggregates each map task to doc grain before its shuffle.
     (``dedup_clusters`` keeps the distinct table: its exact-Jaccard
-    verifier needs it, and one cached table serves both stages there.)
+    verifier needs it, and one computed-once table serves both stages
+    there.)
     """
     sh = shingle_rows(df, id_col, text_col, k)
     bands = lsh_band_table(sh, n_hashes, rows_per_band)
@@ -328,25 +338,28 @@ def dedup_clusters(
         # df by id is one the shingle window needs anyway).  NULL text maps
         # to "" (sha2 of any non-null text is 64 hex chars, so no collision):
         # null-text docs form one exact group instead of vanishing from the
-        # null-unsafe __h equi-join below.  keys is CACHED — two narrow
-        # columns; uncached it would re-scan + re-hash the full corpus text
-        # a second time when rep_of runs after connected components.
-        keys = df.select(
-            F.col(id_col).alias("__orig_id"),
-            F.coalesce(F.sha2(F.col(text_col), 256), F.lit("")).alias("__h"),
-        ).cache()
-        rep_ids = keys.groupBy("__h").agg(
-            F.min("__orig_id").alias("__rep")
-        ).cache()
+        # null-unsafe __h equi-join below.  keys and rep_ids are computed
+        # ONCE for the whole call — two narrow columns each; otherwise the
+        # rep_of join after connected components would re-scan + re-hash
+        # the full corpus text.
+        keys = compute_once(
+            df.select(
+                F.col(id_col).alias("__orig_id"),
+                F.coalesce(F.sha2(F.col(text_col), 256), F.lit("")).alias("__h"),
+            )
+        )
+        rep_ids = compute_once(
+            keys.groupBy("__h").agg(F.min("__orig_id").alias("__rep"))
+        )
         work = df.join(
             rep_ids.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
         )
     else:
-        keys = None
-        rep_ids = None
         work = df
 
-    sh = shingles(work, id_col, text_col, k).cache()
+    # the shingle table feeds the band table, both verification joins and
+    # both size lookups
+    sh = compute_once(shingles(work, id_col, text_col, k))
     bands = lsh_band_table(sh, n_hashes, rows_per_band)
     cand = (
         grid_self_pairs(bands, ["band", "band_key"], "id", chunk)
@@ -374,10 +387,8 @@ def dedup_clusters(
     # superstep re-ANALYZES its edge plan even though execution reads the
     # edge cache, and the full shingle→band→grid→verify tree makes that
     # Catalyst pass the dominant cost of the whole pipeline (measured 3×:
-    # ~31-49 s → ~8-10 s on the 22k-doc bench case).  Eager, so the shingle
-    # cache can retire immediately.
+    # ~31-49 s → ~8-10 s on the 22k-doc bench case).
     verified = verified.localCheckpoint()
-    sh.unpersist()  # verified is materialized; the shingles are spent
     # jump=True: a duplicate CHAIN (A≈B≈C≈… with no short cuts) has
     # diameter = chain length, so plain min-label relaxation would need one
     # superstep per link; pointer jumping converges in O(log chain) rounds.
@@ -404,26 +415,12 @@ def dedup_clusters(
     csize = mapping.groupBy("canonical_id").agg(
         F.count("*").alias("cluster_size")
     )
-    out = mapping.join(csize, "canonical_id").select(
+    return mapping.join(csize, "canonical_id").select(
         "id",
         "canonical_id",
         "cluster_size",
         (F.col("id") == F.col("canonical_id")).alias("is_canonical"),
     )
-    if collapse_exact:
-        # materialize the doc-grain numeric result (the same storage class
-        # the CC state already uses) so the rep-id cache can be retired —
-        # no internal cache outlives the call (SPARK_GRAFT_EAGER=0 keeps it
-        # lazy for the plan audit; the verified-edge checkpoint above stays
-        # unconditional — it guards the superstep engine's per-iteration
-        # re-analysis cost, not cache hygiene)
-        from graph_computing_go_spark.session import eager_results
-
-        if eager_results():
-            out = out.localCheckpoint()
-            rep_ids.unpersist()
-            keys.unpersist()
-    return out
 
 
 def ngram_jaccard_pairs(

@@ -126,8 +126,8 @@ def prepare_training_corpus(
             "pred_lang",
         )
     )
-    # doc-grain scalar result, same hygiene as dedup_clusters: materialize so
-    # the meta cache can be retired — no internal cache outlives the call
+    # doc-grain scalar result: materialize so the meta cache can be
+    # retired — no internal cache outlives the call
     # (SPARK_GRAFT_EAGER=0 keeps it lazy for the plan audit, per the
     # eager_results() convention every materialization point follows)
     from graph_computing_go_spark.session import eager_results

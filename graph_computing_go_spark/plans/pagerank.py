@@ -114,9 +114,19 @@ def pagerank(
         # hygiene — metrics reset and deletion of a previous run's stale
         # ahead-checkpoints, which would otherwise stay silently resumable.
         # resume is deliberately not forwarded: an empty input's result is
-        # definitionally empty, never a prior checkpoint's state.
-        out = verts.select("id", F.lit(0.0).alias("rank"))
+        # definitionally empty, never a prior checkpoint's state.  But a
+        # caller asking to RESUME over an empty input most likely has an
+        # upstream filter gone empty: refuse before the fresh run deletes
+        # the checkpoints that resume was meant to continue.
         runner = runner or SuperstepRunner(spark)
+        if resume and runner._manifest_iters("pagerank"):
+            verts.unpersist()
+            raise ValueError(
+                "pagerank(resume=True) got an empty edge table; the "
+                f"checkpoints under {runner.checkpoint_dir} are kept — pass "
+                "resume=False to start a fresh (empty) run over them"
+            )
+        out = verts.select("id", F.lit(0.0).alias("rank"))
         state, _ = runner.run(
             "pagerank", out, lambda s, _i: s, lambda *_: True, max_iter=0
         )

@@ -114,17 +114,20 @@ class SuperstepRunner:
     def _manifest_iters(self, name: str) -> list[int]:
         """Sorted iteration numbers with a committed manifest — the ONE
         place the manifest filename scheme is parsed (resume and the
-        fresh-run ahead-cleanup must never disagree on it)."""
+        fresh-run ahead-cleanup must never disagree on it).  A foreign file
+        whose stem is not an iteration number (``manifest_x.json``) is not
+        a manifest: it is skipped, never parsed."""
         if not self.checkpoint_dir:
             return []
         base = os.path.join(self.checkpoint_dir, name)
         if not os.path.isdir(base):
             return []
-        return sorted(
-            int(f[len("manifest_") : -len(".json")])
+        stems = (
+            f[len("manifest_") : -len(".json")]
             for f in os.listdir(base)
             if f.startswith("manifest_") and f.endswith(".json")
         )
+        return sorted(int(s) for s in stems if s.isdecimal())
 
     def latest_checkpoint(self, name: str) -> tuple[int, DataFrame] | None:
         """(iteration, state) of the newest complete checkpoint, or None."""

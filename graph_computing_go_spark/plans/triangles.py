@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_computing_go_spark.session import compute_once
+
 
 def _canonical_edges(edges: DataFrame) -> DataFrame:
     return (
@@ -60,7 +62,10 @@ def triangle_list(edges: DataFrame, degree_oriented: bool = False) -> DataFrame:
     With ``degree_oriented`` the three corners are returned sorted
     (x < y < z) so output is identical either way.
     """
-    e = _oriented_edges(edges) if degree_oriented else _canonical_edges(edges)
+    # e feeds both wedge legs and the closing-edge semi-join
+    e = compute_once(
+        _oriented_edges(edges) if degree_oriented else _canonical_edges(edges)
+    )
     e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
     wedges = e1.join(e2, "y")

@@ -44,6 +44,20 @@ def eager_results() -> bool:
     return os.environ.get("SPARK_GRAFT_EAGER", "1") != "0"
 
 
+def compute_once(df):
+    """``df`` as a lazy ``localCheckpoint`` — for a DERIVED table that one
+    query consumes more than once.  ``.cache()`` does not serve that case
+    under Spark 4.1's AQE: an exchange whose subtree reads a cached relation
+    (a ``TableCacheQueryStage``, whose stage id enters the exchange's
+    canonical form) is never reused, so every consumer re-runs every
+    shuffle above the cache.  Exchanges above a checkpoint scan ARE reused,
+    and the checkpoint itself computes once.  Never pass a caller's input:
+    only the operator that derived a table may pin it.
+    ``SPARK_GRAFT_EAGER=0`` returns ``df`` unchanged so the plan audit sees
+    the full lineage."""
+    return df.localCheckpoint(eager=False) if eager_results() else df
+
+
 def is_cached(df) -> bool:
     """True when this plan is already persisted — i.e. the CALLER owns a
     cache on it.  ``cache()``/``unpersist()`` act on the SHARED

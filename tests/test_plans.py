@@ -374,6 +374,44 @@ def test_unterminated_valid_tail_line_is_reterminated(spark, tmp_path):
     assert [r["iter"] for r in recs] == [1, 2, 3, 4, 5, 6]
 
 
+def test_foreign_manifest_file_is_skipped(spark, tmp_path):
+    """A stray ``manifest_x.json`` in the checkpoint dir is not a manifest:
+    fresh runs and resumes skip it instead of failing to parse its stem,
+    and it is left in place."""
+    import os
+
+    ckdir = str(tmp_path / "ck")
+    df = edge_df(spark, random_graph(20, 50, seed=7))
+    runner = SuperstepRunner(spark, checkpoint_dir=ckdir, checkpoint_every=2)
+    pagerank(df, tol=0.0, max_iter=4, runner=runner)
+    foreign = os.path.join(ckdir, "pagerank", "manifest_x.json")
+    with open(foreign, "w") as f:
+        f.write("{}")
+    assert runner.latest_checkpoint("pagerank")[0] == 4
+    _res, iters = pagerank(df, tol=0.0, max_iter=6, runner=runner, resume=True)
+    assert iters == 6
+    _res, iters = pagerank(df, tol=0.0, max_iter=2, runner=runner)  # fresh
+    assert iters == 2 and runner.latest_checkpoint("pagerank")[0] == 2
+    assert os.path.exists(foreign)
+
+
+def test_empty_resume_keeps_prior_checkpoints(spark, tmp_path):
+    """pagerank(empty, resume=True) must refuse rather than run the fresh
+    0-superstep run that deletes the previous run's checkpoints: an
+    upstream filter gone empty must not destroy recoverable state."""
+    ckdir = str(tmp_path / "ck")
+    graph_a = edge_df(spark, random_graph(30, 90, seed=11))
+    runner = SuperstepRunner(spark, checkpoint_dir=ckdir, checkpoint_every=2)
+    pagerank(graph_a, tol=0.0, max_iter=6, runner=runner)  # ckpts ..6
+    empty = spark.createDataFrame([], "src long, dst long")
+    with pytest.raises(ValueError, match="resume=True"):
+        pagerank(empty, runner=runner, resume=True)
+    it, _state = runner.latest_checkpoint("pagerank")
+    assert it == 6
+    _res, iters = pagerank(graph_a, tol=0.0, max_iter=8, runner=runner, resume=True)
+    assert iters == 8
+
+
 def test_empty_graph_degenerates_gracefully(spark):
     """Empty edge tables: PR returns an empty typed ranking (no 1/0), LPA
     converges at iteration 1 instead of running max_iter supersteps."""

@@ -34,12 +34,67 @@ AUDIT_QUERIES = [
 ]
 
 
+# expression ids, plan ids and stage ids differ between two runs of the
+# same subtree; codegen stage markers and the missing-input "!" depend on
+# where the subtree sits in its consumer's plan
+_IDS = re.compile(r"#\d+|\[plan_id=\d+\]|(?<=QueryStage )\d+")
+_MARKS = re.compile(r"\*\(\d+\) |(?<=- )!|^ *!", re.M)
+
+
+def _walk(plan, visit) -> None:
+    """Visit the nodes an executed (AQE-final) plan ran: through query
+    stages, but not into cached relations (their own plans) or reused
+    exchanges (which ran elsewhere)."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _walk(plan.executedPlan(), visit)
+    if name in ("InMemoryTableScanExec", "ReusedExchangeExec", "TableCacheQueryStageExec"):
+        return
+    if name.endswith("QueryStageExec"):
+        return _walk(plan.plan(), visit)
+    visit(plan, name)
+    it = plan.children().iterator()
+    while it.hasNext():
+        _walk(it.next(), visit)
+
+
+def shuffle_signatures(jplan) -> list[str]:
+    """One signature per shuffle exchange an executed plan ran: its
+    canonical subtree text with run-specific ids removed, plus the ids of
+    the RDDs it scans (two checkpoints print alike)."""
+    sigs = []
+
+    def visit(node, name):
+        if name != "ShuffleExchangeExec":
+            return
+        rdds = []
+        _walk(node, lambda n, nm: rdds.append(str(n.rdd().id())) if nm == "RDDScanExec" else None)
+        text = _MARKS.sub("", _IDS.sub("#", node.canonicalized().toString()))
+        sigs.append(f"{text}|rdd:{','.join(rdds)}")
+
+    _walk(jplan, visit)
+    return sigs
+
+
+def duplicated_shuffles(jplan) -> int:
+    """Shuffle stages an executed plan ran more than once: exchanges whose
+    subtree equals one that already ran in the same query.  AQE normally
+    reuses such an exchange, but never one above a cached relation
+    (Spark 4.1: the ``TableCacheQueryStage`` id enters its canonical form,
+    which is also why this compares id-free text, not canonical plans)."""
+    sigs = shuffle_signatures(jplan)
+    return len(sigs) - len(set(sigs))
+
+
 def audit(df) -> dict:
-    """Static executedPlan audit.  NOTE: the printed plan repeats shared
-    subtrees (every unioned branch re-prints its lineage; at runtime AQE
-    stage reuse + .cache() evaluate each once), so exchange inventories are
-    reported as DISTINCT signatures, not raw node counts."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    """executedPlan audit of a frame that has run.  NOTE: the printed plan
+    repeats shared subtrees (every unioned branch re-prints its lineage), so
+    exchange inventories are reported as DISTINCT signatures, not raw node
+    counts; ``duplicated_shuffles`` counts the repeats that actually RAN
+    twice (AQE reuses a repeated exchange only when no cached relation is
+    below it)."""
+    jplan = df._jdf.queryExecution().executedPlan()
+    plan = jplan.toString()
     exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
     seen: list[str] = []
     for kind, args in exchanges:
@@ -48,6 +103,7 @@ def audit(df) -> dict:
             seen.append(key)
     return {
         "exchange_kinds": seen,
+        "duplicated_shuffles": duplicated_shuffles(jplan),
         "single_partition": "SinglePartition" in plan,
         "broadcasts": "BroadcastExchange" in plan
         or "BroadcastHashJoin" in plan,
@@ -98,8 +154,14 @@ def main() -> None:
         f"Auto-generated by `python tools/plandump.py {sf_dir}` "
         "(local[4], shuffle_partitions=8, AQE on).  Exchange inventories",
         "are DISTINCT shuffle signatures — the static plan text re-prints",
-        "shared subtrees per unioned branch, which AQE stage reuse and",
-        "caching evaluate once at runtime.  `SinglePartition present` is",
+        "shared subtrees per unioned branch.  `duplicated shuffle stages`",
+        "counts the exchanges the executed plan RAN more than once: AQE",
+        "reuses a repeated exchange only when no cached relation is below",
+        "it (Spark 4.1).  The audit runs lazy (SPARK_GRAFT_EAGER=0), so",
+        "`session.compute_once` is off here: a table an operator computes",
+        "once at run time may count again when a cached input sits below",
+        "it (tests/test_plan_invariants.py `*_run_once` pin the run-time",
+        "plans).  `SinglePartition present` is",
         "acceptable ONLY for the |shuffle-partitions|-row offset tables of",
         "global_row_number (operators/graph.py) — never a full-data",
         "collapse.  PushedFilters / ReadSchema prove scan-level predicate",
@@ -115,6 +177,7 @@ def main() -> None:
             f"## {name}",
             "",
             f"- shuffle keys: {', '.join(a['exchange_kinds']) or '(none)'}",
+            f"- duplicated shuffle stages: {a['duplicated_shuffles']}",
             f"- SinglePartition present: {'yes (offset tables only)' if a['single_partition'] else 'no'}",
             f"- broadcast joins: {'yes' if a['broadcasts'] else 'no'}",
             f"- WholeStageCodegen spans: {a['codegen_spans']}",
