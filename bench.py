@@ -142,23 +142,17 @@ def main() -> None:
 
     from graph_computing_go_spark.plans.superstep import SuperstepRunner
 
-    # CSR-style packed adjacency is the default layout (measured 10-15%
-    # faster supersteps, BENCH/BASELINE.md round-3 addendum);
-    # SPARK_GRAFT_PACKED=0 forces the flat edge cache for layout A/B runs.
-    packed = os.environ.get("SPARK_GRAFT_PACKED", "1") != "0"
     r_pr = SuperstepRunner(spark)
     t0 = time.time()
     _, big_pr_iters = pagerank(
-        big, tol=0.0, max_iter=5, dangling="drop", runner=r_pr, packed=packed
+        big, tol=0.0, max_iter=5, dangling="drop", runner=r_pr
     )
     big_pr_s = time.time() - t0
     times["scale_pagerank_5it"] = round(big_pr_s, 3)
 
     r_cc = SuperstepRunner(spark)
     t0 = time.time()
-    _, big_cc_iters = connected_components(
-        big, max_iter=30, runner=r_cc, packed=packed
-    )
+    _, big_cc_iters = connected_components(big, max_iter=30, runner=r_cc)
     big_cc_s = time.time() - t0
     times["scale_connected_components"] = round(big_cc_s, 3)
 

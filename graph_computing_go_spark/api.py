@@ -1189,78 +1189,6 @@ _CODE_EDGES_SQL = f"""
 """
 
 
-def _proc_start(pid: int) -> str | None:
-    """starttime of a live pid (/proc/<pid>/stat field 22, stable for the
-    process's lifetime), or None where /proc is unavailable."""
-    try:
-        with open(f"/proc/{pid}/stat") as fh:
-            # comm (field 2) may contain spaces/parens — split after ')'
-            return fh.read().rsplit(")", 1)[1].split()[19]
-    except (OSError, IndexError):
-        return None
-
-
-def _owner_alive(d: str) -> bool | None:
-    """True: the recorded owner is verifiably alive.  False: gone, or its
-    PID was recycled (starttime mismatch).  None: no/odd marker or
-    unverifiable — the caller applies the mtime fallback."""
-    import os
-
-    try:
-        parts = open(os.path.join(d, ".owner_pid")).read().split()
-        pid = int(parts[0])
-    except (OSError, ValueError, IndexError):
-        return None
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        pass  # exists, owned by someone else — fall through to starttime
-    if len(parts) < 2:
-        return None  # pid-only marker: liveness can't rule out recycling
-    now_start = _proc_start(pid)
-    if now_start is None:
-        return None  # no /proc — can't distinguish owner from recycler
-    return now_start == parts[1]
-
-
-def _prune_roundtrip_dirs(td: str, keep: str) -> None:
-    """Reclaim sibling round-trip dirs keyed on LIVENESS, not age: each dir
-    carries its owner's "pid starttime" marker.  A recycled PID — any
-    long-lived process inheriting the number after the owner exits — is
-    detected by the starttime mismatch, so a VERIFIABLY alive owner is never
-    reclaimed (a long-running concurrent driver can't lose its live dir
-    mid-write).  Markerless dirs (older layout / torn write) and markers
-    whose liveness can't be verified fall back to mtime > 24h."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    for old in glob.glob(f"{td}/code_repos_roundtrip_*"):
-        if old == keep:
-            continue
-        alive = _owner_alive(old)
-        try:
-            stale = time.time() - os.path.getmtime(old) > 24 * 3600
-        except OSError:
-            continue  # raced with a concurrent reclaim
-        if (alive is False) or (alive is None and stale):
-            shutil.rmtree(old, ignore_errors=True)
-
-
-def _write_owner_marker(rt: str) -> None:
-    import os
-
-    try:
-        start = _proc_start(os.getpid())
-        with open(os.path.join(rt, ".owner_pid"), "w") as fh:
-            fh.write(f"{os.getpid()} {start}" if start else str(os.getpid()))
-    except OSError:
-        pass  # marker is best-effort; mtime fallback still applies
-
-
 @register(
     "code_edge_table",
     f"""WITH {_CODE_EDGES_SQL}
@@ -1280,24 +1208,16 @@ def q_code_edge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         verify_content_sha256,
     )
 
-    import os
+    from pyspark import SparkFiles
 
     repos = synthesize_repos(spark, n_files=300, seed=42)
     # per-row invariant as a REAL round-trip check (source vs re-read copy).
-    # Path under .tmp/ (gitignored) keyed by the Spark applicationId:
-    # reused (not leaked) within a session, private across concurrent
-    # drivers (a fixed path races when compare.py and pytest overlap).
-    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    td = os.path.join(pkg_parent, ".tmp")
-    if not os.access(pkg_parent, os.W_OK):
-        # read-only install (site-packages): fall back to the system tmp dir
-        import tempfile
-
-        td = os.path.join(tempfile.gettempdir(), "gcgs_tmp")
-    rt = f"{td}/code_repos_roundtrip_{spark.sparkContext.applicationId}"
-    _prune_roundtrip_dirs(td, keep=rt)
+    # The copy lives under the driver's SparkFiles root: Spark keeps that
+    # directory private to this driver and deletes it at stop(), so the
+    # path is reused (not leaked) within a session and never shared by
+    # concurrent drivers.
+    rt = f"{SparkFiles.getRootDirectory()}/code_repos_roundtrip"
     repos.write.mode("overwrite").parquet(rt)
-    _write_owner_marker(rt)
     ingested = spark.read.parquet(rt)
     verify_content_sha256(repos, ingested)
     return build_edge_table(ingested).select(

@@ -1,4 +1,4 @@
-"""Graph-shaping operators: edge derivation, induction, ranking, dedup.
+"""Graph-shaping operators: edge derivation, induction, ranking.
 
 Covers the reference's join/filter/rank stages (SURVEY.md §2.2-2.7):
 
@@ -10,7 +10,6 @@ Covers the reference's join/filter/rank stages (SURVEY.md §2.2-2.7):
   ladder (wikiEntropy.go:281-310, openAlexEntropy.go:376-394): the reference
   sorts once and re-slices the array; we rank once and re-filter the ranked
   DataFrame — one sort, six filters.
-- dedup-with-preference (wikiEntropy.go:163-184) → window ``row_number``.
 - min-in-degree filter (openAlexEntropy.go:365-374).
 - canonical undirected edge orientation (distanceComplexity.go:50-62).
 
@@ -286,17 +285,3 @@ def percent_ladder_stats(
         if not edges_preowned:
             edges.unpersist()
     return res
-
-
-def dedup_prefer(
-    df: DataFrame, key: str, order_cols: list, keep: int = 1
-) -> DataFrame:
-    """Keep the best ``keep`` rows per ``key`` under ``order_cols`` ordering —
-    the reference's non-redirect-wins map insertion (wikiEntropy.go:163-184)
-    as a window dedup (J2)."""
-    w = Window.partitionBy(key).orderBy(*order_cols)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= keep)
-        .drop("__rn")
-    )

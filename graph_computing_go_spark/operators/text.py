@@ -78,11 +78,6 @@ def token_count(
     )
 
 
-def stopword_table(spark) -> DataFrame:
-    rows = [(lang, w) for lang, ws in sorted(STOPWORDS.items()) for w in ws]
-    return spark.createDataFrame(rows, "cand_lang string, word string")
-
-
 def language_id(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

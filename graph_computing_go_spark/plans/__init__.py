@@ -5,8 +5,10 @@ year's shrunk graph (/root/reference/internal/openAlexEntropy/openAlexEntropy.go
 and its resumability is a task ledger (internal/extractWikipediadump/mongoClient.go:65-79).
 We generalize both into a superstep driver (``superstep.SuperstepRunner``) with
 per-iteration parquet checkpoints, per-partition lineage rows, and mid-run
-resume, then build PageRank / connected components / label propagation /
-triangle counting on top.
+resume, then build PageRank / connected components / label propagation on
+one message-passing core (``messages.MessageGraph``: the packed adjacency,
+the gather and the changed-count convergence) and triangle counting beside
+them.
 """
 
 from graph_computing_go_spark.plans.components import connected_components  # noqa: F401

@@ -6,9 +6,10 @@ takes the min of its own label and its (undirected) neighbors' labels; stop
 when no label changes.  Converges in O(diameter) supersteps; exact output:
 component id = min vertex id in the component.
 
-Spark shape per superstep: one join of the label table to the symmetrized
-edge table + ``groupBy(id).min`` — map-side partial min makes hub vertices a
-non-issue (min is associative; the two-stage aggregation is free).
+Spark shape per superstep: one gather of the labels over the packed
+symmetrized adjacency (``plans.messages``) + ``groupBy(id).min`` — map-side
+partial min makes hub vertices a non-issue (min is associative; the
+two-stage aggregation is free).
 The changed-row count doubles as the convergence action.
 """
 
@@ -17,30 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_computing_go_spark.plans.pagerank import packed_adjacency, vertices_of
+from graph_computing_go_spark.plans.messages import (
+    MessageGraph,
+    symmetrize,
+    vertices_of,
+)
 from graph_computing_go_spark.plans.superstep import SuperstepRunner
-
-
-def symmetrize(edges: DataFrame, dedup: bool = True) -> DataFrame:
-    """Undirected edge table (both orientations, no self-loops).
-
-    ``dedup=False`` skips the distinct — a full extra shuffle of 2|E| rows.
-    Safe for idempotent aggregations (min-label CC: duplicate edges change
-    nothing); REQUIRED True for frequency-sensitive ones (label propagation
-    counts votes)."""
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    # both orientations from ONE scan of the edge table (explode of the two
-    # (s, d) structs) — the union-of-two-selects form read it twice, which
-    # is two full file scans when the input is an uncached parquet table
-    both = e.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src").alias("s"), F.col("dst").alias("d")),
-                F.struct(F.col("dst").alias("s"), F.col("src").alias("d")),
-            )
-        ).alias("__e")
-    ).select(F.col("__e.s").alias("src"), F.col("__e.d").alias("dst"))
-    return both.distinct() if dedup else both
+from graph_computing_go_spark.session import compute_once
 
 
 def connected_components(
@@ -48,14 +32,13 @@ def connected_components(
     max_iter: int = 100,
     runner: SuperstepRunner | None = None,
     resume: bool = False,
-    packed: bool = True,
     jump: bool = False,
 ) -> tuple[DataFrame, int]:
     """Returns ((id, component) DataFrame, iterations_run).
 
-    ``packed=True`` swaps the flat symmetrized edge cache for the CSR-style
-    packed adjacency (``plans.pagerank.packed_adjacency``); results are
-    identical (min is idempotent, duplicate edges in the arrays are free).
+    The messages travel over the packed adjacency of the symmetrized edge
+    table (``plans.messages``); duplicate edges are free (min is
+    idempotent), so it skips symmetrize's distinct.
 
     ``jump=True`` appends a pointer-jumping phase to every superstep
     (``component := component's current component`` — one extra vertex-grain
@@ -74,77 +57,50 @@ def connected_components(
     diameter is not — duplicate CHAINS in dedup_clusters, path-ish
     subgraphs: a 64-vertex path converges in 7 supersteps vs 64.
     """
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # cache PRE-PARTITIONED on the join key: every superstep's labels⋈edges
-    # join finds the cached side already hash(src)-distributed, so only the
-    # (vertex-grain) label side and the gather shuffle move per superstep —
-    # measured 1.8× faster supersteps on the 120M-row symmetrized bench
-    # graph vs a plainly-cached table (PERF.md §6)
-    sym = symmetrize(edges, dedup=False)
-    if packed:
-        ud = packed_adjacency(sym, n_part).cache()
-    else:
-        ud = sym.repartition(n_part, "src").cache()
-    ud.count()
-    verts = vertices_of(edges).cache()
-
-    # State (id, component, prev): prev carries last iteration's label so the
-    # changed-count is one aggregation over the materialized state.
-    state0 = verts.select(
-        "id", F.col("id").alias("component"), F.col("id").alias("prev")
-    )
-
-    def step(labels: DataFrame, _i: int) -> DataFrame:
-        lab = labels.select("id", "component")
-        gathered = ud.join(
-            lab.select(F.col("id").alias("src"), "component"), "src"
+    with MessageGraph(symmetrize(edges, dedup=False), runner) as g:
+        # State (id, component, prev): prev carries last iteration's label
+        # so the changed-count is one aggregation over the materialized
+        # state.
+        state0 = vertices_of(edges).select(
+            "id", F.col("id").alias("component"), F.col("id").alias("prev")
         )
-        if packed:
-            gathered = gathered.select(
-                "component", F.explode("dsts").alias("dst")
+
+        def step(labels: DataFrame, _i: int) -> DataFrame:
+            lab = labels.select("id", "component")
+            nbr_min = (
+                g.gather(lab, "component")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("component").alias("nbr_min"))
             )
-        nbr_min = gathered.groupBy(F.col("dst").alias("id")).agg(
-            F.min("component").alias("nbr_min")
-        )
-        relaxed = lab.join(nbr_min, "id", "left").select(
-            "id",
-            F.least(
-                "component", F.coalesce("nbr_min", F.col("component"))
-            ).alias("component"),
-            F.col("component").alias("prev"),
-        )
-        if not jump:
-            return relaxed
-        # pointer jump: component := component's component.  Every label IS
-        # a live vertex id (labels start as ids and move by min over ids),
-        # so the lookup always matches; left+coalesce is belt-and-braces.
-        # prev stays the PRE-relax label so the convergence count sees any
-        # change made by either phase.
-        parent = relaxed.select(
-            F.col("id").alias("component"), F.col("component").alias("__pc")
-        )
-        return relaxed.join(parent, "component", "left").select(
-            "id",
-            F.coalesce("__pc", F.col("component")).alias("component"),
-            "prev",
-        )
+            relaxed = lab.join(nbr_min, "id", "left").select(
+                "id",
+                F.least(
+                    "component", F.coalesce("nbr_min", F.col("component"))
+                ).alias("component"),
+                F.col("component").alias("prev"),
+            )
+            if not jump:
+                return relaxed
+            # pointer jump: component := component's component.  Every label
+            # IS a live vertex id (labels start as ids and move by min over
+            # ids), so the lookup always matches; left+coalesce is
+            # belt-and-braces.  prev stays the PRE-relax label so the
+            # convergence count sees any change made by either phase.
+            # relaxed feeds both join sides and sits above the cached
+            # adjacency, whose exchanges AQE never reuses: compute it once,
+            # or every superstep re-runs the gather.
+            relaxed = compute_once(relaxed)
+            parent = relaxed.select(
+                F.col("id").alias("component"), F.col("component").alias("__pc")
+            )
+            return relaxed.join(parent, "component", "left").select(
+                "id",
+                F.coalesce("__pc", F.col("component")).alias("component"),
+                "prev",
+            )
 
-    runner = runner or SuperstepRunner(spark)
-
-    def converged(_old: DataFrame, new: DataFrame, _i: int) -> bool:
-        changed = new.agg(
-            F.sum((F.col("component") != F.col("prev")).cast("long")).alias("c")
-        ).collect()[0]["c"]
-        runner.last_delta = float(changed or 0)  # changed-rows → metrics
-        # sum over an EMPTY state is NULL — an edgeless graph is converged,
-        # not an infinite loop (dedup_clusters with zero verified pairs)
-        return (changed or 0) == 0
-
-    state, iters = runner.run(
-        "connected_components", state0, step, converged, max_iter=max_iter,
-        resume=resume,
-    )
-    ud.unpersist()  # final state is localCheckpointed; retire the edge cache
-    verts.unpersist()
+        state, iters = g.runner.run(
+            "connected_components", state0, step, g.changed("component"),
+            max_iter=max_iter, resume=resume,
+        )
     return state.select("id", "component"), iters

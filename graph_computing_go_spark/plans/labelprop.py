@@ -11,7 +11,8 @@ Public spec: Raghavan et al. 2007, made deterministic for golden parity
   oscillate on bipartite-ish structures, so a finite cap is part of the
   spec; callers that need a fixed snapshot pass ``exact_iters``).
 
-Shape per superstep: edges ⋈ labels → groupBy(id, label).count() →
+Shape per superstep: the labels gathered over the packed adjacency
+(``plans.messages``) → groupBy(id, label).count() →
 window row_number (count DESC, label ASC) = 1.  The count aggregation is
 map-side combined; the window partitions by vertex so it shuffles on the
 same key as the groupBy — Catalyst collapses them into one exchange.
@@ -22,8 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from graph_computing_go_spark.plans.components import symmetrize
-from graph_computing_go_spark.plans.pagerank import packed_adjacency, vertices_of
+from graph_computing_go_spark.plans.messages import (
+    MessageGraph,
+    symmetrize,
+    vertices_of,
+)
 from graph_computing_go_spark.plans.superstep import SuperstepRunner
 
 
@@ -33,73 +37,45 @@ def label_propagation(
     exact_iters: int | None = None,
     runner: SuperstepRunner | None = None,
     resume: bool = False,
-    packed: bool = True,
 ) -> tuple[DataFrame, int]:
     """Returns ((id, label) DataFrame, iterations_run).
 
-    ``packed=True`` uses the CSR-style packed adjacency; vote counts are
-    preserved because symmetrize(dedup=True) runs BEFORE packing and
-    collect_list keeps every (deduplicated) edge."""
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # distinct() leaves hash(src,dst) partitioning — re-key to hash(src) so
-    # the per-superstep join reuses the cached layout (see components.py)
-    sym = symmetrize(edges)
-    if packed:
-        ud = packed_adjacency(sym, n_part).cache()
-    else:
-        ud = sym.repartition(n_part, "src").cache()
-    ud.count()
-    verts = vertices_of(edges).cache()
-    state0 = verts.select(
-        "id", F.col("id").alias("label"), F.col("id").alias("prev")
-    )
-
-    def step(labels: DataFrame, _i: int) -> DataFrame:
-        lab = labels.select("id", "label")
-        gathered = ud.join(
-            lab.select(F.col("id").alias("src"), "label"), "src"
+    Vote counts are preserved: symmetrize(dedup=True) runs BEFORE packing
+    and collect_list keeps every (deduplicated) edge."""
+    with MessageGraph(symmetrize(edges), runner) as g:
+        state0 = vertices_of(edges).select(
+            "id", F.col("id").alias("label"), F.col("id").alias("prev")
         )
-        if packed:
-            gathered = gathered.select(
-                "label", F.explode("dsts").alias("dst")
+
+        def step(labels: DataFrame, _i: int) -> DataFrame:
+            lab = labels.select("id", "label")
+            freq = (
+                g.gather(lab, "label")
+                .groupBy(F.col("dst").alias("id"), "label")
+                .agg(F.count("*").alias("c"))
             )
-        freq = gathered.groupBy(F.col("dst").alias("id"), "label").agg(
-            F.count("*").alias("c")
-        )
-        w = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("label"))
-        best = (
-            freq.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("id", F.col("label").alias("new_label"))
-        )
-        return lab.join(best, "id", "left").select(
-            "id",
-            F.coalesce("new_label", F.col("label")).alias("label"),
-            F.col("label").alias("prev"),
-        )
+            w = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("label"))
+            best = (
+                freq.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .select("id", F.col("label").alias("new_label"))
+            )
+            return lab.join(best, "id", "left").select(
+                "id",
+                F.coalesce("new_label", F.col("label")).alias("label"),
+                F.col("label").alias("prev"),
+            )
 
-    runner = runner or SuperstepRunner(spark)
+        if exact_iters is None:
+            converged = g.changed("label")
+        else:
+            def converged(_old: DataFrame, new: DataFrame, i: int) -> bool:
+                new.count()  # materialize this superstep's checkpoint
+                return i >= exact_iters
+            max_iter = exact_iters
 
-    if exact_iters is not None:
-        def converged(_old: DataFrame, new: DataFrame, i: int) -> bool:
-            new.count()  # materialize this superstep's checkpoint
-            return i >= exact_iters
-        max_iter = exact_iters
-    else:
-        def converged(_old: DataFrame, new: DataFrame, _i: int) -> bool:
-            changed = new.agg(
-                F.sum((F.col("label") != F.col("prev")).cast("long")).alias("c")
-            ).collect()[0]["c"]
-            runner.last_delta = float(changed or 0)  # changed-rows → metrics
-            # sum over an empty state is NULL: an edgeless graph is
-            # converged, not an infinite loop (same guard as components.py)
-            return (changed or 0) == 0
-
-    state, iters = runner.run(
-        "label_propagation", state0, step, converged, max_iter=max_iter,
-        resume=resume,
-    )
-    ud.unpersist()  # final state is localCheckpointed; retire the edge cache
-    verts.unpersist()
+        state, iters = g.runner.run(
+            "label_propagation", state0, step, converged, max_iter=max_iter,
+            resume=resume,
+        )
     return state.select("id", "label"), iters

@@ -134,61 +134,23 @@ def test_extraction_edge_cases(spark):
     assert build_edge_table(repos).count() == 0
 
 
-def test_roundtrip_dir_pruning_liveness(tmp_path):
-    """Reclaim rules for the code_repos_roundtrip scratch dirs: dead or
-    PID-recycled owners are reclaimed, a verifiably-alive owner is kept even
-    past the 24h mtime fallback (no reclaim race against a live long-running
-    driver), and unverifiable dirs fall back to mtime."""
+def test_code_edge_table_roundtrip_under_spark_files_root(spark):
+    """code_edge_table's round-trip copy lives under the driver's SparkFiles
+    root (private to this driver, deleted by Spark at stop()), and a second
+    call in the same session reuses that one directory."""
     import os
-    import time
 
-    from graph_computing_go_spark.api import (
-        _proc_start,
-        _prune_roundtrip_dirs,
-        _write_owner_marker,
-    )
+    from pyspark import SparkFiles
 
-    td = str(tmp_path)
-    old = time.time() - 48 * 3600
+    from graph_computing_go_spark.api import q_code_edge_table
 
-    def mk(name, marker=None, stale=False):
-        d = os.path.join(td, f"code_repos_roundtrip_{name}")
-        os.mkdir(d)
-        if marker is not None:
-            with open(os.path.join(d, ".owner_pid"), "w") as fh:
-                fh.write(marker)
-        if stale:
-            os.utime(d, (old, old))
-        return d
-
-    me, start = os.getpid(), _proc_start(os.getpid())
-    assert start is not None  # Linux CI: /proc is available
-    # find a dead pid: fork a child that exits immediately
-    pid = os.fork()
-    if pid == 0:
-        os._exit(0)
-    os.waitpid(pid, 0)
-
-    live_stale = mk("live", f"{me} {start}", stale=True)
-    recycled = mk("recycled", f"{me} 1")  # starttime mismatch = recycled
-    dead = mk("dead", f"{pid} 12345")
-    markerless_stale = mk("mstale", stale=True)
-    markerless_fresh = mk("mfresh")
-    pid_only_stale = mk("pidonly", f"{me}", stale=True)
-    keep = mk("keep")
-
-    _prune_roundtrip_dirs(td, keep=keep)
-
-    assert os.path.isdir(live_stale)  # alive owner: never reclaimed
-    assert not os.path.isdir(recycled)
-    assert not os.path.isdir(dead)
-    assert not os.path.isdir(markerless_stale)
-    assert os.path.isdir(markerless_fresh)
-    assert not os.path.isdir(pid_only_stale)  # unverifiable + stale
-    assert os.path.isdir(keep)
-
-    # marker round-trip: what _write_owner_marker writes reads back as alive
-    _write_owner_marker(keep)
-    from graph_computing_go_spark.api import _owner_alive
-
-    assert _owner_alive(keep) is True
+    root = SparkFiles.getRootDirectory()
+    rt = os.path.join(root, "code_repos_roundtrip")
+    first = q_code_edge_table(spark, "")
+    files = first.inputFiles()
+    assert files and all(rt in f for f in files), files
+    n = first.count()
+    entries = sorted(os.listdir(root))
+    second = q_code_edge_table(spark, "")
+    assert second.count() == n > 0
+    assert sorted(os.listdir(root)) == entries  # same directory, no sibling

@@ -145,8 +145,7 @@ def test_single_scan_expansions_have_no_union(spark):
     """The round-4 explode rewrites (PERF.md §15): corner/endpoint
     expansion must be a Generate over ONE scan, never a Union re-executing
     the source subtree per column."""
-    from graph_computing_go_spark.plans.components import symmetrize
-    from graph_computing_go_spark.plans.pagerank import vertices_of
+    from graph_computing_go_spark.plans.messages import symmetrize, vertices_of
     from graph_computing_go_spark.plans.triangles import triangles_per_vertex
 
     edges = spark.range(300).select(
@@ -226,11 +225,12 @@ def _cached_docs(spark):
     return _cached(_docs(spark, 120))
 
 
-def _run_plans(monkeypatch, module: str, fn):
+def _run_plans(monkeypatch, module: str | tuple[str, ...], fn):
     """Run ``fn()`` and collect its result; return the executed plans of the
     result and of every ``localCheckpoint`` taken on behalf of ``module``
-    (the nearest calling frame outside pyspark and session.py) — the
-    superstep engine's own checkpoints are not the module's."""
+    (the nearest calling frame outside pyspark and session.py; a tuple
+    names several modules) — the superstep engine's own checkpoints are not
+    the module's."""
     import os
     import sys
 
@@ -396,4 +396,31 @@ def test_ngd_and_triangles_cached_edges_run_once(spark, monkeypatch):
     _assert_runs_once(
         _run_plans(monkeypatch, "triangles.py", lambda: triangle_count(e))
     )
+    e.unpersist()
+
+
+def test_supersteps_cached_edges_run_once(spark, monkeypatch):
+    """Every superstep checkpoint of PageRank, CC (plain and with pointer
+    jumping) and LPA runs each shuffle once.  The gather sits above the
+    cached adjacency, so a state table that two joins consume must be
+    computed once, or each consumer re-runs the gather (CC's jump phase)."""
+    from graph_computing_go_spark.plans import (
+        connected_components,
+        label_propagation,
+        pagerank,
+    )
+    from tools.plandump import duplicated_shuffles
+
+    e = _cached_edges(spark)
+    for fn in (
+        lambda: pagerank(e, tol=0.0, max_iter=3)[0],
+        lambda: connected_components(e)[0],
+        lambda: connected_components(e, jump=True)[0],
+        lambda: label_propagation(e, exact_iters=3)[0],
+    ):
+        plans = _run_plans(monkeypatch, ("superstep.py", "components.py"), fn)
+        assert len(plans) > 3  # initial state, >= 2 supersteps, result
+        assert any("InMemoryTableScan" in p.toString() for p in plans)
+        for p in plans:
+            assert duplicated_shuffles(p) == 0, p.toString()
     e.unpersist()

@@ -22,6 +22,7 @@ from graph_computing_go_spark.plans import (
     SuperstepRunner,
     connected_components,
     label_propagation,
+    messages,
     pagerank,
     triangle_count,
     triangles_per_vertex,
@@ -42,6 +43,16 @@ def random_graph(n=60, m=300, seed=42):
         if s != d:
             edges.add((s, d))
     return sorted(edges)
+
+
+# the exact tests pack this input's adjacency in rows of 3 dsts: its
+# vertices have undirected degree ~6, so most span several rows
+MULTI_CHUNK = random_graph(40, 120, seed=5)
+
+
+def _chunked(monkeypatch, edges):
+    if edges is MULTI_CHUNK:
+        monkeypatch.setattr(messages, "CHUNK", 3)
 
 
 # ---------------------------------------------------------------- oracles
@@ -168,39 +179,29 @@ def test_pagerank_salted_equals_plain(spark):
         assert math.isclose(p[v], s[v], abs_tol=1e-12)
 
 
-def test_pagerank_packed_equals_plain(spark):
-    # chunk=3 forces multi-chunk packed rows so the per-src deg vs per-chunk
-    # array-length distinction is actually exercised
-    import importlib
-
-    pr_mod = importlib.import_module("graph_computing_go_spark.plans.pagerank")
-
-    df = edge_df(spark, random_graph(30, 90))
-    plain, _ = pagerank(df, tol=0.0, max_iter=8, packed=False)
-    orig = pr_mod.packed_adjacency
-    pr_mod.packed_adjacency = lambda e, n, chunk=4096: orig(e, n, chunk=3)
-    try:
-        packed, _ = pagerank(df, tol=0.0, max_iter=8, packed=True)
-    finally:
-        pr_mod.packed_adjacency = orig
-    p = {r["id"]: r["rank"] for r in plain.collect()}
-    q = {r["id"]: r["rank"] for r in packed.collect()}
-    assert p.keys() == q.keys()
-    for v in p:
-        assert math.isclose(p[v], q[v], abs_tol=1e-12)
+def test_pagerank_packed_equals_plain(spark, monkeypatch):
+    # CHUNK=3 packs every src of out-degree > 3 into several adjacency rows,
+    # so the per-src deg vs per-row array length distinction is exercised
+    # against the plain power iteration of the python oracle
+    edges = random_graph(30, 90)
+    assert max(Counter(s for s, _ in edges).values()) > 3
+    monkeypatch.setattr(messages, "CHUNK", 3)
+    got, _ = pagerank(edge_df(spark, edges), tol=0.0, max_iter=8)
+    want, _ = pr_oracle(edges, tol=0.0, max_iter=8)
+    rows = {r["id"]: r["rank"] for r in got.collect()}
+    assert rows.keys() == want.keys()
+    for v, r in want.items():
+        assert math.isclose(rows[v], r, abs_tol=1e-9)
 
 
-@pytest.mark.parametrize("edges", [TWO_COMPONENTS, STAR, random_graph(40, 60)])
-def test_connected_components_exact(spark, edges):
+@pytest.mark.parametrize(
+    "edges", [TWO_COMPONENTS, STAR, random_graph(40, 60), MULTI_CHUNK]
+)
+def test_connected_components_exact(spark, monkeypatch, edges):
+    _chunked(monkeypatch, edges)
     got, _ = connected_components(edge_df(spark, edges))
     want = cc_oracle(edges)
     assert {r["id"]: r["component"] for r in got.collect()} == want
-
-
-@pytest.mark.parametrize("edges", [TWO_COMPONENTS, random_graph(40, 60)])
-def test_connected_components_packed_equals_plain(spark, edges):
-    got, _ = connected_components(edge_df(spark, edges), packed=False)
-    assert {r["id"]: r["component"] for r in got.collect()} == cc_oracle(edges)
 
 
 def test_connected_components_pointer_jump(spark):
@@ -217,18 +218,10 @@ def test_connected_components_pointer_jump(spark):
     assert iters <= 9
 
 
-@pytest.mark.parametrize("edges", [TRI_FAN, random_graph(40, 120)])
-def test_label_propagation_exact(spark, edges):
+@pytest.mark.parametrize("edges", [TRI_FAN, random_graph(40, 120), MULTI_CHUNK])
+def test_label_propagation_exact(spark, monkeypatch, edges):
+    _chunked(monkeypatch, edges)
     got, _ = label_propagation(edge_df(spark, edges), exact_iters=4)
-    want = lp_oracle(edges, exact_iters=4)
-    assert {r["id"]: r["label"] for r in got.collect()} == want
-
-
-def test_label_propagation_flat_equals_packed_default(spark):
-    # the exact_iters oracle test above runs the packed default; this pins
-    # the flat layout to the same python oracle so both layouts stay covered
-    edges = random_graph(40, 120)
-    got, _ = label_propagation(edge_df(spark, edges), exact_iters=4, packed=False)
     want = lp_oracle(edges, exact_iters=4)
     assert {r["id"]: r["label"] for r in got.collect()} == want
 
