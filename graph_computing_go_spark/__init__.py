@@ -9,8 +9,9 @@ and distance complexity — plus the link-graph suite the north rule adds
 training-data toolkit (dedup, similarity search, text analysis, multimodal
 plumbing).
 
-Everything is DataFrame/SQL + Arrow-vectorized pandas UDFs; no per-row Python,
-no RDDs.  Designed for 100 TB-scale inputs: explicit partitioning, broadcast
+Everything is DataFrame/SQL, with Arrow-batched Python kernels only where
+Python does real work (tokenizer, sequence packing, numpy matmul and codec
+seams — PERF.md §19); no per-row Python, no RDDs.  Designed for 100 TB-scale inputs: explicit partitioning, broadcast
 hints for dimension tables, salting + two-stage aggregation for hub vertices,
 AQE on by default, and a checkpoint/resume superstep driver for the iterative
 algorithms.

@@ -1146,18 +1146,23 @@ def _repos_values_sql(n_files: int = 300, seed: int = 42) -> str:
     return ",\n".join(rows)
 
 
-# extraction + resolution mirrored from sources/ingest.py (_PATTERNS,
-# _ref_to_target, resolve_imports) — same regexes, same min()-winner maps
-_CODE_EDGES_SQL = f"""
-    repos(repo, path, lang, content) AS (VALUES {_repos_values_sql()}),
+# the refs CTE alone, over any repos(repo, path, lang, content) relation:
+# sources/ingest._PATTERNS in DuckDB's dialect (tests/test_ingest.py runs
+# both on hand-written edge-case rows)
+_CODE_REFS_SQL = """
     refs AS (
       SELECT repo, path, unnest(
         CASE lang
           WHEN 'python' THEN regexp_extract_all(content, '(?m)^import\\s+(\\S+:\\S+)$', 1)
-          WHEN 'go'     THEN regexp_extract_all(content, '(?m)^import "([^"]+)"$', 1)
-          ELSE               regexp_extract_all(content, 'require\\(''([^'']+)''\\)', 1)
+          WHEN 'go'     THEN regexp_extract_all(content, '(?m)^import\\s+"([^"]+)"$', 1)
+          WHEN 'js'     THEN regexp_extract_all(content, 'require\\(''([^'']+)''\\)', 1)
         END) AS ref
-      FROM repos),
+      FROM repos)"""
+
+# extraction + resolution mirrored from sources/ingest.py (_PATTERNS,
+# _ref_to_target, resolve_imports) — same regexes, same min()-winner maps
+_CODE_EDGES_SQL = f"""
+    repos(repo, path, lang, content) AS (VALUES {_repos_values_sql()}),{_CODE_REFS_SQL},
     targets AS (
       SELECT repo, path, ref,
         CASE WHEN contains(ref, ':') THEN string_split(ref, ':')[1]
@@ -1196,7 +1201,7 @@ _CODE_EDGES_SQL = f"""
 )
 def q_code_edge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BASELINE.json north-star input path: synthetic (repo, path, commit,
-    lang, content) table → sha256-checked ingest → vectorized import
+    lang, content) table → sha256-checked ingest → JVM regex import
     extraction → two-stage resolution → edge table.
 
     The driver-facing projection is the (repo, path) provenance pairs — a

@@ -83,32 +83,33 @@ def _hist_entropy(counts: Column, total: Column) -> Column:
 
 
 def grouped_degree_entropy(ind: DataFrame, group_cols: list[str]) -> DataFrame:
-    """(group_cols…, dd_h_in, n_vertices, se_h_in, n_in) from a member
-    in-degree table (group_cols…, d) that INCLUDES d=0 members: dd is the
-    degree-distribution entropy over the histogram (A3 shape), se the
-    structural entropy over d>0 (A4 shape) — the shared per-group formula
-    pair of the yearly and subject lifecycle pipelines.  se columns are
-    NULL for groups with no d>0 member (left join)."""
-    gc = list(group_cols)
-    hist = ind.groupBy(*gc, "d").agg(F.count("*").alias("c"))
-    dd = hist.groupBy(*gc).agg(
-        _hist_entropy(
-            F.sum(F.col("c") * F.log2("c")), F.sum("c").cast("double")
-        ).alias("dd_h_in"),
-        F.sum("c").alias("n_vertices"),
-    )
-    se = (
-        ind.filter(F.col("d") > 0)
-        .select(*gc, F.col("d").cast("double").alias("d"))
-        .groupBy(*gc)
+    """(group_cols…, dd_h_in, n_vertices, se_h_in, n_in, sum_d) from a
+    member in-degree table (group_cols…, d, m) that INCLUDES d=0 members,
+    one row per member, counted m times: dd is the degree-distribution
+    entropy over the histogram (A3 shape), se the structural entropy over
+    d>0 (A4 shape) — the shared per-group formula pair of the yearly and
+    subject lifecycle pipelines — and sum_d the in-degree total with each
+    member once.  se columns are NULL for groups with no d>0 member.
+
+    ONE aggregation over the (group, d) histogram — every d>0 sum is a
+    count-weighted sum over its rows — so ``ind`` has a single consumer and
+    its lineage runs once."""
+    c = F.col("c")
+    d = F.when(F.col("d") > 0, F.col("d").cast("double"))
+    return (
+        ind.groupBy(*group_cols, "d")
+        .agg(F.sum("m").alias("c"), F.count("*").alias("k"))
+        .groupBy(*group_cols)
         .agg(
-            _hist_entropy(
-                F.sum(F.col("d") * F.log2("d")), F.sum("d")
-            ).alias("se_h_in"),
-            F.count("*").alias("n_in"),
+            _hist_entropy(F.sum(c * F.log2(c)), F.sum(c).cast("double")).alias(
+                "dd_h_in"
+            ),
+            F.sum(c).alias("n_vertices"),
+            _hist_entropy(F.sum(c * d * F.log2(d)), F.sum(c * d)).alias("se_h_in"),
+            F.sum(F.when(d.isNotNull(), c)).alias("n_in"),
+            F.sum(F.col("k") * F.col("d")).alias("sum_d"),
         )
     )
-    return dd.join(se, gc, "left")
 
 
 def degree_distribution_entropy(

@@ -158,39 +158,34 @@ def subject_entropy_lifecycle(
         .groupBy("year", "subject", "id")
         .agg(F.sum("c").alias("d"))
     )
-    memk = ms.select(
-        "id",
-        "subject",
-        F.explode(
-            F.filter(years_arr, lambda yy: yy >= F.col("kyr"))
-        ).alias("year"),
-    )
-    ind = memk.join(deg, ["year", "subject", "id"], "left").select(
-        "year", "subject", F.coalesce("d", F.lit(0)).alias("d")
-    )
-    stats = grouped_degree_entropy(ind, ["year", "subject"])
-    # per-(year, subject) edge totals from the SAME (subject, y0)
-    # increments — a (subject × years)-grain table, never an edge-grain pass
-    ne = (
-        deg0.groupBy("subject", "y0")
-        .agg(F.sum("c").alias("c"))
+    # one row per (member, subject) with its multiplicity m: a vertex that
+    # lists a subject twice counts twice in that subject's entropies but its
+    # in-edges once in n_edges.  ms is partitioned on id, so this
+    # aggregation needs no exchange.
+    memk = (
+        ms.groupBy("id", "subject", "kyr")
+        .agg(F.count("*").alias("m"))
         .select(
+            "id",
             "subject",
-            "c",
+            "m",
             F.explode(
-                F.filter(years_arr, lambda yy: yy >= F.col("y0"))
+                F.filter(years_arr, lambda yy: yy >= F.col("kyr"))
             ).alias("year"),
         )
-        .groupBy("year", "subject")
-        .agg(F.sum("c").alias("n_edges"))
     )
+    ind = memk.join(deg, ["year", "subject", "id"], "left").select(
+        "year", "subject", F.coalesce("d", F.lit(0)).alias("d"), "m"
+    )
+    # every dst with d>0 is a member (y0 >= its kyr), so the edge count is
+    # the members' in-degree total
     out = (
-        stats.join(ne, ["year", "subject"], "left")
+        grouped_degree_entropy(ind, ["year", "subject"])
         .select(
             F.col("year").cast("int").alias("year"),
             "subject",
             "n_vertices",
-            F.coalesce("n_edges", F.lit(0)).alias("n_edges"),
+            F.col("sum_d").alias("n_edges"),
             F.round("dd_h_in", 6).alias("dd_h_in"),
             F.round("se_h_in", 6).alias("se_h_in"),
             F.coalesce("n_in", F.lit(0)).alias("n_in"),

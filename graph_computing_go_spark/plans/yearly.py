@@ -154,36 +154,22 @@ def _universe_stats(
         F.explode(F.filter(ladder, lambda p: p >= F.col("minp"))).alias("percent"),
     )
     ind = v_slices.join(deg, ["rank_type", "percent", "id"], "left").select(
-        "rank_type", "percent", F.coalesce("d", F.lit(0)).alias("d")
+        "rank_type",
+        "percent",
+        F.coalesce("d", F.lit(0)).alias("d"),
+        F.lit(1).alias("m"),
     )
-    stats = grouped_degree_entropy(ind, ["rank_type", "percent"])
-    # per-slice edge totals from the SAME (rank_type, eminp) increments —
-    # a ≤ |universes|×|ladder|-row table, never an edge-grain pass
-    ne = (
-        deg0.groupBy("rank_type", "eminp")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select(
-            "rank_type",
-            "cnt",
-            F.explode(
-                F.filter(ladder, lambda p: p >= F.col("eminp"))
-            ).alias("percent"),
-        )
-        .groupBy("rank_type", "percent")
-        .agg(F.sum("cnt").alias("n_edges"))
-    )
-    return (
-        stats.join(ne, ["rank_type", "percent"], "left")
-        .select(
-            F.lit(year).alias("year"),
-            "percent",
-            "rank_type",
-            "n_vertices",
-            F.coalesce("n_edges", F.lit(0)).alias("n_edges"),
-            F.round("dd_h_in", 6).alias("dd_h_in"),
-            F.round("se_h_in", 6).alias("se_h_in"),
-            F.coalesce("n_in", F.lit(0)).alias("n_in"),
-        )
+    # every dst with d>0 is a slice member (minp(dst) <= eminp <= percent),
+    # so the slice's edge count is its members' in-degree total
+    return grouped_degree_entropy(ind, ["rank_type", "percent"]).select(
+        F.lit(year).alias("year"),
+        "percent",
+        "rank_type",
+        "n_vertices",
+        F.col("sum_d").alias("n_edges"),
+        F.round("dd_h_in", 6).alias("dd_h_in"),
+        F.round("se_h_in", 6).alias("se_h_in"),
+        F.coalesce("n_in", F.lit(0)).alias("n_in"),
     )
 
 

@@ -4,10 +4,11 @@ This is the engine's analogue of the reference's entity-resolution pipeline
 (/root/reference/internal/wikiEntropy/wikiEntropy.go:156-279): out-link
 strings (import refs) resolve to canonical vertices through an exact join
 with a normalized-key fallback, self-links dropped (:266), unresolved refs
-dropped (like titles that never resolve).  Per BASELINE.json:15 the
-extraction is a vectorized pandas UDF (Arrow batches, regex via pandas .str)
-— never per-row Python — and every ingested row carries a sha256 that must
-equal the source's (``verify_content_sha256``).
+dropped (like titles that never resolve).  Extraction is one JVM
+expression, ``regexp_extract_all`` chosen by language like the reference's
+plain Go regexes — no Python worker, so the optimizer sees through it — and
+every ingested row carries a sha256 that must equal the source's
+(``verify_content_sha256``).
 
 Vertex ids are ``xxhash64(repo || '/' || path)`` — deterministic across
 runs/clusters (monotonically_increasing_id is not; SURVEY.md §7 hard-part 1).
@@ -21,13 +22,16 @@ sized (no content column — column pruning keeps the scan narrow).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 # Import-reference patterns per language (match the synthetic corpus and the
-# common real-world forms; refs normalize to "repo:path_stem").
+# common real-world forms; refs normalize to "repo:path_stem").  The
+# `code_edge_table` oracle (api._CODE_REFS_SQL) runs the same patterns on
+# DuckDB's RE2: both engines read `\s`/`\S` as ASCII classes (only Java's
+# `\s` also matches `\v`, so no pattern may rely on it) and, with the `d`
+# flag, end lines only at line feeds (tests/test_ingest.py pins the edge
+# cases).
 _PATTERNS = {
     "python": r"^import\s+(\S+:\S+)$",
     "go": r'^import\s+"([^"]+)"$',
@@ -35,34 +39,21 @@ _PATTERNS = {
 }
 
 
-def _extract_refs_udf():
-    # built lazily: pandas_udf parses its return-type DDL against the active
-    # session, so the decorator cannot run at import time
-    @pandas_udf("array<string>")
-    def extract_refs(lang: pd.Series, content: pd.Series) -> pd.Series:
-        import re
-
-        result = pd.Series([[]] * len(lang), index=lang.index, dtype="object")
-        for lg, pat in _PATTERNS.items():
-            mask = lang == lg
-            if mask.any():
-                result[mask] = content[mask].str.findall(pat, flags=re.MULTILINE)
-        return result
-
-    return extract_refs
-
-
 def extract_imports(repos: DataFrame) -> DataFrame:
     """(repo, path, ref): one row per import reference found in content.
 
-    The regexes run fully vectorized per Arrow batch (pandas .str.findall
-    with MULTILINE over the language-masked slice of each batch) — one
-    Python roundtrip per ~10k rows, not per row.
+    One ``regexp_extract_all`` per language, picked by ``lang`` (other
+    languages and NULL content yield no rows).  ``(?md)``: multi-line
+    anchors with UNIX_LINES, so ``^``/``$`` break only at line feeds —
+    Java's plain MULTILINE ``$`` also matches before CRLF and U+0085, where
+    RE2 and Python ``re`` do not.
     """
-    extract_refs = _extract_refs_udf()
-    return repos.select(
-        "repo", "path", F.explode(extract_refs("lang", "content")).alias("ref")
-    )
+    refs = None
+    for lang, pat in _PATTERNS.items():
+        cond = F.col("lang") == lang
+        found = F.regexp_extract_all("content", F.lit("(?md)" + pat), F.lit(1))
+        refs = F.when(cond, found) if refs is None else refs.when(cond, found)
+    return repos.select("repo", "path", F.explode(refs).alias("ref"))
 
 
 def _ref_to_target(refs: DataFrame) -> DataFrame:

@@ -20,6 +20,5 @@ from graph_computing_go_spark.streaming.events import (  # noqa: F401
 )
 from graph_computing_go_spark.streaming.sessions import (  # noqa: F401
     sessionize_batch,
-    sessionize_stream,
     sessionize_stream_watermarked,
 )

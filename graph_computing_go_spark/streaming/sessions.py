@@ -1,114 +1,16 @@
-"""Custom stateful streaming operator: gap-based sessionization.
+"""Gap-based sessionization, streaming and batch.
 
-``applyInPandasWithState`` keeps one open session per user in state; events
-arriving within ``gap_minutes`` of the last event extend it, a larger gap
-closes it (emitted) and opens a new one.  The batch twin
-(``sessionize_batch``) computes identical sessions with window functions
+``sessionize_stream_watermarked`` is Spark's native ``session_window``
+under an event-time watermark (pure JVM).  The batch twin
+(``sessionize_batch``) computes the same sessions with window functions
 (lag → gap flag → running session id), so the two paths cross-check — the
 same kappa-architecture test as streaming/events.py.
-
-Scale notes: state is one tiny row per active user key, partitioned by the
-group key; the pandas kernel sees each user's batch slice as Arrow data (no
-per-row Python).  In a one-shot (availableNow) run, each user's final
-session remains open in state and is NOT emitted — tests account for that.
-
-Ordering contract: events are sorted per user WITHIN a micro-batch; an
-event arriving in a LATER batch that predates the open session folds into
-it (session_start = min), but an event older than an already-EMITTED
-session is assigned to the open session, not retroactively to the emitted
-one — the standard no-watermark trade-off.  Batch-twin equality therefore
-holds exactly when each user's events arrive in order across batches (one
-batch, as in availableNow over a single file, trivially qualifies).
-
-``sessionize_stream_watermarked`` is the by-spec alternative: Spark's
-native ``session_window`` + event-time watermark buffers sessions in state
-until the watermark passes end+gap, so cross-batch stragglers younger than
-``max_lateness`` merge (even bridging two provisional sessions), and older
-ones are dropped — pure JVM, no custom state kernel.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, "
-    "n_events long, sum_value double"
-)
-STATE_SCHEMA = "start long, last long, n long, s double"
-
-
-def _sessionize_kernel(gap_seconds: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        events = pd.concat(list(pdfs))
-        events = events.sort_values("ts")
-        # microsecond precision: second-truncation here would disagree with
-        # the batch twin's timestamps
-        ts = events["ts"].astype("int64") // 1_000
-        vals = events["value"].astype("float64")
-
-        if state.exists:
-            start, last, n, s = state.get
-        else:
-            start = last = None
-            n, s = 0, 0.0
-
-        gap_us = gap_seconds * 1_000_000
-        out = []
-        for t, v in zip(ts, vals):
-            if start is None:
-                start, last, n, s = t, t, 1, float(v)
-            elif t - last > gap_us:
-                out.append((user_id, start, last, n, s))
-                start, last, n, s = t, t, 1, float(v)
-            else:
-                # cross-batch stragglers may predate the open session: fold
-                # with min-start (see module ordering contract)
-                start, last = min(start, t), max(last, t)
-                n, s = n + 1, s + float(v)
-        state.update((int(start), int(last), int(n), float(s)))
-        if out:
-            df = pd.DataFrame(
-                out,
-                columns=[
-                    "user_id", "session_start", "session_end", "n_events",
-                    "sum_value",
-                ],
-            )
-            df["session_start"] = pd.to_datetime(df["session_start"], unit="us")
-            df["session_end"] = pd.to_datetime(df["session_end"], unit="us")
-            yield df
-
-    return fn
-
-
-def sessionize_stream(
-    spark: SparkSession, source_dir: str, gap_minutes: int = 30
-) -> DataFrame:
-    schema = spark.read.parquet(source_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .select("user_id", "ts", "value")
-    )
-    return stream.groupBy("user_id").applyInPandasWithState(
-        _sessionize_kernel(gap_minutes * 60),
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
 
 
 def sessionize_stream_watermarked(
@@ -119,17 +21,14 @@ def sessionize_stream_watermarked(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Event-time-watermark sessionization via Spark's NATIVE
-    ``session_window`` — the by-spec answer to cross-batch stragglers that
-    the no-watermark custom-state path (``sessionize_stream``) handles by
-    documented trade-off only.
+    ``session_window``.
 
     Semantics: sessions stay buffered in state until the watermark
     (max event time − ``max_lateness``) passes session end + gap, so an
     out-of-order event arriving in a LATER micro-batch — even one that
     bridges two provisional sessions into one — lands in the right session
     as long as it is younger than the watermark; events older than the
-    watermark are dropped, also by spec.  Contrast with the custom-state
-    path, which folds stragglers into whatever session is currently open.
+    watermark are dropped, also by spec.
 
     Boundary contract: ``session_window`` windows are end-exclusive
     (an event exactly ``gap`` after the previous one starts a NEW session),
@@ -138,8 +37,7 @@ def sessionize_stream_watermarked(
 
     Scale shape: built-in streaming session aggregation — incremental state
     store keyed by (user, session), watermark-driven eviction, no Python in
-    the loop at all (the custom-state path needs an Arrow kernel; this one
-    is pure JVM).
+    the loop at all.
     """
     schema = spark.read.parquet(source_dir).schema
     reader = spark.readStream.schema(schema)

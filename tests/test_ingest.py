@@ -154,3 +154,47 @@ def test_code_edge_table_roundtrip_under_spark_files_root(spark):
     second = q_code_edge_table(spark, "")
     assert second.count() == n > 0
     assert sorted(os.listdir(root)) == entries  # same directory, no sibling
+
+
+def test_regex_dialect_matches_duckdb_oracle(spark):
+    """extract_imports (Java regex) and the code_edge_table oracle's refs
+    CTE (DuckDB's RE2) return the same refs where the regex dialects could
+    part ways: line terminators other than LF, non-ASCII whitespace, and
+    tabs.  Vertical tab is left out on purpose: Java's and Python's `\\s`
+    match it and RE2's does not, so no pattern may rely on it."""
+    import duckdb
+    import pandas as pd
+
+    from graph_computing_go_spark.api import _CODE_REFS_SQL
+
+    nbsp = "\u00a0"
+    rows = [
+        # CRLF: plain Java MULTILINE `$` would match before "\r\n"
+        ("o/r", "crlf.py", "python", "import o/x:crlf\r\nimport o/x:lf\nx"),
+        # U+0085 ends a line for plain Java MULTILINE, never for RE2
+        ("o/r", "nel.py", "python", "import o/x:a\u0085import o/x:b\nx"),
+        # NBSP is whitespace to Python's `\s`, to neither Java nor RE2
+        ("o/r", "nbsp_sep.py", "python", f"import{nbsp}o/x:nb\nx"),
+        ("o/r", "nbsp_ref.py", "python", f"import o/x:n{nbsp}b\nx"),
+        ("o/r", "tab.go", "go", 'import\t"o/x/tab"\nimport "o/x/sp"'),
+    ]
+    df = spark.createDataFrame(
+        [(r, p, "c", lg, c) for r, p, lg, c in rows],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    got = sorted(map(tuple, extract_imports(df).collect()))
+    con = duckdb.connect()
+    con.register(
+        "hand", pd.DataFrame(rows, columns=["repo", "path", "lang", "content"])
+    )
+    want = sorted(
+        con.execute(
+            f"WITH repos AS (SELECT * FROM hand), {_CODE_REFS_SQL} "
+            "SELECT repo, path, ref FROM refs"
+        ).fetchall()
+    )
+    con.close()
+    assert got == want
+    # non-vacuous: the tab and NBSP-inside-ref rows extract on both sides
+    assert ("o/r", "tab.go", "o/x/tab") in got
+    assert ("o/r", "nbsp_ref.py", f"o/x:n{nbsp}b") in got

@@ -87,6 +87,21 @@ def test_stream_prep_single_stateful_projection(spark, tmp_path):
         assert bad not in plan, plan
 
 
+def test_edge_table_runs_no_python_worker(spark):
+    """Import extraction is a JVM expression: the executed plan of
+    build_edge_table holds no Python evaluation node (a pandas UDF shows as
+    ArrowEvalPython, a plain Python UDF as BatchEvalPython)."""
+    from graph_computing_go_spark.sources import build_edge_table, synthesize_repos
+
+    out = build_edge_table(synthesize_repos(spark, n_files=60, seed=5))
+    assert out.collect()
+    plan = _plan(out)
+    for node in ("ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    # non-vacuous: the extraction is in view
+    assert "regexp_extract_all" in plan, plan
+
+
 def test_subject_lifecycle_no_year_fanned_edge_exchange(spark):
     """PERF.md §16: the subject lifecycle must never shuffle a YEAR-FANNED
     edge table — edges are tagged once with ymax and only vertex/subject
@@ -424,3 +439,40 @@ def test_supersteps_cached_edges_run_once(spark, monkeypatch):
         for p in plans:
             assert duplicated_shuffles(p) == 0, p.toString()
     e.unpersist()
+
+
+def test_lifecycles_cached_inputs_run_once(spark, monkeypatch):
+    """The member in-degree table feeds both entropies and the edge totals
+    through ONE histogram aggregation: no shuffle runs twice in any year's
+    stats checkpoint of the yearly walk, nor in the subject lifecycle's
+    result (whose fixture lists one subject twice on some vertices)."""
+    from graph_computing_go_spark.plans.subjects import subject_entropy_lifecycle
+    from graph_computing_go_spark.plans.yearly import yearly_entropy_pipeline
+
+    e = _cached_edges(spark)
+    v = _cached(
+        spark.range(60).select(
+            "id",
+            (F.lit(2000) + F.col("id") % 3).cast("int").alias("year"),
+            F.when(F.col("id") % 5 == 0, F.array(F.lit("x"), F.lit("x")))
+            .otherwise(F.array((F.col("id") % 3).cast("string")))
+            .alias("subjects"),
+        )
+    )
+    years = [2000, 2001, 2002]
+    yearly = _run_plans(
+        monkeypatch,
+        "yearly.py",
+        lambda: yearly_entropy_pipeline(v.select("id", "year"), e, years=years),
+    )
+    assert len(yearly) == len(years) + 1  # one stats checkpoint per year
+    _assert_runs_once(yearly)
+    _assert_runs_once(
+        _run_plans(
+            monkeypatch,
+            "subjects.py",
+            lambda: subject_entropy_lifecycle(v, e, years=years),
+        )
+    )
+    e.unpersist()
+    v.unpersist()
