@@ -6,10 +6,14 @@ Covers the reference's join/filter/rank stages (SURVEY.md §2.2-2.7):
   reference (/root/reference/internal/wikiEntropy/wikiEntropy.go:122-153,
   internal/openAlexEntropy/openAlexEntropy.go:314-339) → ``left_semi`` joins.
 - graph shrink + current in-degree (openAlexEntropy.go:341-363).
-- top-k-percent slice over an in-degree ranking with the {10..100} percent
+- top-k-percent slices over an in-degree ranking with the {10..100} percent
   ladder (wikiEntropy.go:281-310, openAlexEntropy.go:376-394): the reference
-  sorts once and re-slices the array; we rank once and re-filter the ranked
-  DataFrame — one sort, six filters.
+  sorts once and re-slices the array; slices are nested, so we rank once,
+  tag every vertex with the smallest slice holding it and every edge with
+  the larger tag of its endpoints (``slice_membership``), and count the
+  whole ladder in one aggregation.
+- grouped global ranking (``global_row_number(group_cols=...)``): one
+  range-partitioned sort ranks every (year, universe) of the yearly walk.
 - min-in-degree filter (openAlexEntropy.go:365-374).
 - canonical undirected edge orientation (distanceComplexity.go:50-62).
 
@@ -25,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from graph_computing_go_spark.session import eager_results, is_cached
+from graph_computing_go_spark.session import compute_once, eager_results
 
 #: modulus used to fold lineitem keys into a bounded vertex id space
 GRAPH_MOD = 500
@@ -102,86 +106,14 @@ def min_in_degree_filter(edges: DataFrame, min_deg: int = 2) -> DataFrame:
 _ORDINAL_LIMIT = 1 << 33
 
 
-def global_row_number(
-    df: DataFrame,
-    order_cols: list,
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Global 1-based ``row_number`` under ``order_cols`` WITHOUT the
-    single-partition ``Window.orderBy`` collapse (SURVEY §4 sort row; the
-    reference's one global sort is wikiEntropy.go:290-294).
-
-    Plan: range-partitioned shuffle on the sort keys (partition i holds keys
-    strictly before partition i+1's), a per-partition window rank (parallel),
-    and partition-offset addition from a tiny per-partition count aggregate
-    (|shuffle partitions| rows — the only serial window runs over THAT, not
-    the data).  The exchange feeding both branches is identical, so Catalyst
-    reuses it; RangePartitioner's sample seed is partition-index-derived,
-    hence boundaries are deterministic for deterministic input either way.
-
-    ``order_cols``: Column expressions WITH sort direction (``F.desc(...)``);
-    include a unique tie-break so ranking is total.  Emits ``rank_col`` as
-    long (row counts at the 10^12 grain overflow int).
-    """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    # explicit numPartitions: AQE never re-coalesces a user-specified
-    # repartition, so the pid ↔ range mapping is stable within the query.
-    # monotonically_increasing_id's low 33 bits are the in-partition ordinal
-    # of the partition-sorted rows — local ranks with NO second full-data
-    # exchange and no per-partition window.
-    if num_partitions == 1:
-        # degenerate case (caller measured a small input): one range
-        # partition needs no offset machinery — ordinal + 1 IS the rank.
-        # Same loud 2^33 guard as the multi-partition path (pid is 0 here,
-        # so the raw monotonic id IS the ordinal): a caller that wrongly
-        # passes num_partitions=1 over >2^33 rows must fail, not wrap.
-        out = (
-            df.repartitionByRange(1, *order_cols)
-            .sortWithinPartitions(*order_cols)
-            .withColumn("__mid", F.monotonically_increasing_id())
-        )
-        guard = F.coalesce(
-            F.assert_true(
-                F.col("__mid") < F.lit(_ORDINAL_LIMIT),
-                F.lit(
-                    "global_row_number: a range partition exceeds 2^33 rows — "
-                    "raise num_partitions"
-                ),
-            ).cast("long"),
-            F.lit(0),
-        )
-        return out.withColumn(
-            rank_col,
-            F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)) + 1 + guard,
-        ).drop("__mid")
-    # __pid from spark_partition_id (robust at any size); __local from the
-    # low 33 bits of monotonically_increasing_id — valid while no single
-    # range partition exceeds 2^33 (~8.6e9) rows.  Callers that measured
-    # their cardinality get that bound enforced by rank_partitions_for; at
-    # the 10^12 grain pass num_partitions >= n / 2^33 explicitly.
-    part = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .withColumn(
-            "__local",
-            F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)),
-        )
-    )
-    counts = part.groupBy("__pid").agg(F.count("*").alias("__c"))
-    # the only serial window: |shuffle partitions| rows, bounded at any scale
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    # the guard is FOLDED INTO __off (assert_true yields NULL on success,
-    # coalesce adds 0) so column pruning cannot eliminate it: range-
-    # partition SKEW — not just average size — could push one partition
-    # past 2^33 rows and silently wrap the ordinals; fail loudly instead
-    guard = F.coalesce(
+def _ordinal_guard(rows):
+    """0 while ``rows`` (a partition's row count) stays below the ordinal
+    limit, a loud failure otherwise.  Callers FOLD it into a column the
+    result needs (assert_true yields NULL on success, coalesce adds 0), so
+    column pruning cannot eliminate it."""
+    return F.coalesce(
         F.assert_true(
-            F.col("__c") < F.lit(_ORDINAL_LIMIT),
+            rows < F.lit(_ORDINAL_LIMIT),
             F.lit(
                 "global_row_number: a range partition exceeds 2^33 rows — "
                 "raise num_partitions"
@@ -189,17 +121,99 @@ def global_row_number(
         ).cast("long"),
         F.lit(0),
     )
-    offsets = counts.select(
-        "__pid",
-        (F.coalesce(F.sum("__c").over(w_off), F.lit(0)).cast("long") + guard).alias(
-            "__off"
+
+
+def global_row_number(
+    df: DataFrame,
+    order_cols: list,
+    rank_col: str = "rank",
+    num_partitions: int | None = None,
+    group_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """1-based ``row_number`` under ``order_cols`` WITHOUT the
+    single-partition ``Window.orderBy`` collapse (SURVEY §4 sort row; the
+    reference's one global sort is wikiEntropy.go:290-294).
+
+    Plan: a range-partitioned shuffle on the sort keys (partition i holds
+    keys strictly before partition i+1's), the in-partition ordinal of the
+    partition-sorted rows (the low 33 bits of monotonically_increasing_id —
+    no second full-data exchange, no per-partition window), and an offset
+    per (partition, group) cell from a tiny count aggregate over those
+    cells (the only serial window runs over THAT, not the data).
+
+    ``group_cols``: column names; ranks restart at 1 in every group and the
+    group's row count is emitted as ``n_total``.  The sort runs over
+    ``(group…, order…)``, so each group is a contiguous run of the global
+    order and its rank is the global rank minus the group's start.  The
+    cell table has ≤ |partitions| + |groups| rows and is broadcast: meant
+    for a bounded number of groups (years × universes), not a vertex-grain
+    key — partition such a ranking with a plain Window instead.
+
+    The ranked partitions are materialized ONCE (a lazy localCheckpoint,
+    independent of ``SPARK_GRAFT_EAGER``) and both the cell counts and the
+    ordinals read that copy: re-running the range exchange per consumer
+    (which AQE does whenever a cached relation sits below it) re-samples
+    the boundaries, and two samples of a reshuffled input disagree.
+
+    ``order_cols``: Column expressions WITH sort direction (``F.desc(...)``);
+    include a unique tie-break so ranking is total.  Emits ``rank_col`` as
+    long (row counts at the 10^12 grain overflow int).
+    """
+    group_cols = list(group_cols)
+    keys = [*[F.asc(g) for g in group_cols], *order_cols]
+    if num_partitions is None:
+        num_partitions = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        )
+    # explicit numPartitions: AQE never re-coalesces a user-specified
+    # repartition, so the pid ↔ range mapping is stable within the query
+    ranged = df.repartitionByRange(num_partitions, *keys).sortWithinPartitions(
+        *keys
+    )
+    if num_partitions == 1 and not group_cols:
+        # one range partition, one consumer: ordinal + 1 IS the rank (pid is
+        # 0, so the raw monotonic id is the ordinal) — same loud 2^33 guard
+        mid = ranged.withColumn("__mid", F.monotonically_increasing_id())
+        return mid.withColumn(
+            rank_col,
+            F.col("__mid") + 1 + _ordinal_guard(F.col("__mid")),
+        ).drop("__mid")
+    # __pid from spark_partition_id, not the monotonic id's high bits: an
+    # overflowing ordinal would carry into those and hide from the guard
+    part = ranged.select(
+        "*",
+        F.spark_partition_id().alias("__pid"),
+        F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)).alias(
+            "__local"
         ),
+    ).localCheckpoint(eager=False)
+    cell = ["__pid", *group_cols]
+    cells = part.groupBy(*cell).agg(F.count("*").alias("__c"))
+    # cells in global order; __cum = rows before the cell
+    w_all = Window.orderBy(*cell).rowsBetween(Window.unboundedPreceding, -1)
+    cells = cells.withColumn(
+        "__cum", F.coalesce(F.sum("__c").over(w_all), F.lit(0)).cast("long")
     )
-    return (
-        part.join(F.broadcast(offsets), "__pid")
-        .withColumn(rank_col, F.col("__local") + 1 + F.col("__off"))
-        .drop("__pid", "__off", "__local")
+    pid_start = F.min("__cum").over(Window.partitionBy("__pid"))
+    in_group = Window.partitionBy(*group_cols)
+    offsets = cells.select(
+        *[F.col(c).alias(f"__k{i}") for i, c in enumerate(cell)],
+        # rows of this partition up to the cell's end — at its last cell,
+        # the partition's size: range-partition SKEW, not just average
+        # size, could push one past 2^33 rows and wrap the ordinals
+        (
+            pid_start
+            - F.min("__cum").over(in_group)
+            + _ordinal_guard(F.col("__cum") + F.col("__c") - pid_start)
+        ).alias("__off"),
+        F.sum("__c").over(in_group).alias("__n"),
     )
+    out = part.join(
+        F.broadcast(offsets),
+        [F.col(c).eqNullSafe(F.col(f"__k{i}")) for i, c in enumerate(cell)],
+    ).withColumn(rank_col, F.col("__local") + 1 + F.col("__off"))
+    out = out.drop(*[f"__k{i}" for i in range(len(cell))], "__pid", "__local", "__off")
+    return out.withColumnRenamed("__n", "n_total") if group_cols else out.drop("__n")
 
 
 def rank_by_in_degree(edges: DataFrame) -> DataFrame:
@@ -242,46 +256,128 @@ def rank_partitions_for(spark, n_rows: int) -> int:
     return max(want, floor_for_ordinals)
 
 
-def top_percent(ranked: DataFrame, percent: int) -> DataFrame:
-    """ceil(N*p/100)-prefix slice of a ranked vertex table
-    (wikiEntropy.go:306-308: ``int(math.Ceil(float64(len)*percent/100))``)."""
-    return ranked.filter(
-        F.col("rank") <= F.ceil(F.col("n_total") * percent / 100)
-    ).select("id", "cnt", "rank")
+def slice_membership(
+    edges: DataFrame,
+    ranked: DataFrame,
+    percents: tuple[int, ...],
+    rank_types: tuple[str, ...],
+    keys: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """Vertex and edge membership in the nested top-p% slices of a ranking
+    (the reference re-slices one sorted array, wikiEntropy.go:281-310).
+
+    Slices are NESTED (top-10% ⊂ top-20% ⊂ …), so a vertex's membership is
+    one number, ``minp`` — the smallest ladder point whose ceil(n·p/100)
+    prefix holds its rank (wikiEntropy.go:306-308) — and an edge lies in
+    slice p exactly when ``eminp`` = max(minp(src), minp(dst)) ≤ p.  A
+    ladder omitting 100 leaves the ranks beyond its top point with NULL
+    minp, in NO slice, and their edges with NULL eminp: greatest() would
+    skip the NULL and leak the edge into the other endpoint's slices, so the
+    edge tag is NULL-strict and such edges are dropped.
+
+    ``ranked``: (id, *keys, rank_type, rank, n_total), one ranking per
+    (keys…, rank_type) with ``rank_types`` its universes; ``edges``:
+    (src, dst, *keys).  Returns (id, *keys, rank_type, minp) and
+    (dst, *keys, rank_type, eminp).
+    """
+    conds = [
+        (F.col("rank") <= F.ceil(F.col("n_total") * p / 100), p)
+        for p in sorted(set(percents))
+    ]
+    minp = F.when(*conds[0])
+    for cond, p in conds[1:]:
+        minp = minp.when(cond, p)
+    # the pivot below and the caller's vertex slices both read it
+    verts = compute_once(ranked.select("id", *keys, "rank_type", minp.alias("minp")))
+    # PIVOT the universes into one row per vertex before the tag joins: the
+    # edge table joins a |V|-row table twice and the per-universe fan
+    # happens ROW-LOCALLY after the joins — the dst-side shuffle moves |E|
+    # rows, not |E|×|universes|
+    wide = verts.groupBy("id", *keys).agg(
+        *[
+            F.max(F.when(F.col("rank_type") == rt, F.col("minp"))).alias(
+                f"__m{i}"
+            )
+            for i, rt in enumerate(rank_types)
+        ]
+    )
+
+    def tags(end, tag):
+        return wide.select(
+            F.col("id").alias(end),
+            *keys,
+            *[F.col(f"__m{i}").alias(f"{tag}{i}") for i in range(len(rank_types))],
+        )
+
+    tagged = (
+        edges.join(tags("src", "__s"), ["src", *keys])
+        .join(tags("dst", "__d"), ["dst", *keys])
+        .select(
+            "dst",
+            *keys,
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(rt).alias("rank_type"),
+                            F.when(
+                                F.col(f"__s{i}").isNotNull()
+                                & F.col(f"__d{i}").isNotNull(),
+                                F.greatest(f"__s{i}", f"__d{i}"),
+                            ).alias("eminp"),
+                        )
+                        for i, rt in enumerate(rank_types)
+                    ]
+                )
+            ).alias("__p"),
+        )
+        .select("dst", *keys, "__p.rank_type", "__p.eminp")
+        .filter(F.col("eminp").isNotNull())
+    )
+    return verts, tagged
 
 
 def percent_ladder_stats(
     edges: DataFrame, percents: tuple[int, ...] = (10, 20, 40, 60, 80, 100)
 ) -> DataFrame:
-    """Per ladder point: induced-subgraph vertex/edge counts, one ranked
-    window reused for every slice (the reference re-slices one sorted array,
-    wikiEntropy.go:86-95).  Returns (percent, n_vertices, n_edges)."""
-    ranked = rank_by_in_degree(edges).cache()
-    # don't adopt a caller-owned cache: cache() returns the SHARED
-    # canonicalized-plan entry, so unpersisting below would evict theirs
-    edges_preowned = is_cached(edges)
-    if not edges_preowned:
-        edges = edges.cache()
-    outs = []
-    for p in percents:
-        vs = top_percent(ranked, p)
-        sub = induce_subgraph(edges, vs)
-        outs.append(
-            sub.agg(
-                F.lit(p).alias("percent"),
-                F.count("*").alias("n_edges"),
-            ).crossJoin(vs.agg(F.count("*").alias("n_vertices")))
+    """(percent, n_vertices, n_edges) per ladder point: the top-p% slice of
+    the in-degree ranking and the edge count of the subgraph it induces
+    (wikiEntropy.go:281-310).
+
+    One ranking, the two tag joins of ``slice_membership``, one
+    ``groupBy(eminp)`` count and a running sum over its ≤ |ladder| rows;
+    the slice size is closed-form, min(n, ceil(n·p/100)).
+    """
+    spark = edges.sparkSession
+    indeg = current_in_degree(edges)
+    n = indeg.count()
+    ranked = global_row_number(
+        indeg,
+        [F.desc("cnt"), F.asc("id")],
+        num_partitions=rank_partitions_for(spark, n),
+    ).select(
+        "id", F.lit("in_degree").alias("rank_type"), "rank", F.lit(n).alias("n_total")
+    )
+    _, tagged = slice_membership(edges, ranked, percents, ("in_degree",))
+    points = sorted(set(percents))
+    ladder = F.array(*[F.lit(p) for p in points])
+    res = (
+        tagged.groupBy("eminp")
+        .agg(F.count("*").alias("c"))
+        .select(
+            F.explode(F.filter(ladder, lambda p: p >= F.col("eminp"))).alias("percent"),
+            "c",
         )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    res = res.select("percent", "n_vertices", "n_edges")
-    # ladder-grain result: materialize it and retire the internal caches so
-    # a 50-query driver session doesn't accrete a full edge-table cache per
-    # call (skipped under SPARK_GRAFT_EAGER=0 so plan audits see the plan)
-    if eager_results():
-        res = res.localCheckpoint()
-        ranked.unpersist()
-        if not edges_preowned:
-            edges.unpersist()
-    return res
+        # every ladder point gets a row, with or without edges
+        .unionByName(
+            spark.createDataFrame([(p, 0) for p in points], "percent int, c long")
+        )
+        .groupBy("percent")
+        .agg(F.sum("c").alias("n_edges"))
+        .select(
+            "percent",
+            F.least(F.lit(n), F.ceil(F.col("percent") * n / 100)).alias("n_vertices"),
+            "n_edges",
+        )
+    )
+    return res.localCheckpoint() if eager_results() else res

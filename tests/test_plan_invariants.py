@@ -443,9 +443,12 @@ def test_supersteps_cached_edges_run_once(spark, monkeypatch):
 
 def test_lifecycles_cached_inputs_run_once(spark, monkeypatch):
     """The member in-degree table feeds both entropies and the edge totals
-    through ONE histogram aggregation: no shuffle runs twice in any year's
-    stats checkpoint of the yearly walk, nor in the subject lifecycle's
-    result (whose fixture lists one subject twice on some vertices)."""
+    through ONE histogram aggregation: no shuffle runs twice in the yearly
+    walk — its one plan for every year, nor the grouped ranking's and the
+    slice helper's materializations — nor in the subject lifecycle's result
+    (whose fixture lists one subject twice on some vertices), nor in the
+    percent ladder."""
+    from graph_computing_go_spark.operators.graph import percent_ladder_stats
     from graph_computing_go_spark.plans.subjects import subject_entropy_lifecycle
     from graph_computing_go_spark.plans.yearly import yearly_entropy_pipeline
 
@@ -462,10 +465,12 @@ def test_lifecycles_cached_inputs_run_once(spark, monkeypatch):
     years = [2000, 2001, 2002]
     yearly = _run_plans(
         monkeypatch,
-        "yearly.py",
+        ("yearly.py", "graph.py"),
         lambda: yearly_entropy_pipeline(v.select("id", "year"), e, years=years),
     )
-    assert len(yearly) == len(years) + 1  # one stats checkpoint per year
+    # the tagged edges, the range-partitioned candidates, the slice
+    # vertices, the result and its scan — none of them per year
+    assert len(yearly) == 5
     _assert_runs_once(yearly)
     _assert_runs_once(
         _run_plans(
@@ -474,5 +479,78 @@ def test_lifecycles_cached_inputs_run_once(spark, monkeypatch):
             lambda: subject_entropy_lifecycle(v, e, years=years),
         )
     )
+    _assert_runs_once(
+        _run_plans(monkeypatch, "graph.py", lambda: percent_ladder_stats(e))
+    )
     e.unpersist()
     v.unpersist()
+
+
+def _lifecycle_inputs(spark, n_years):
+    verts = spark.range(600).select(
+        "id", (F.lit(2000) + F.col("id") % n_years).cast("int").alias("year")
+    )
+    edges = spark.range(4000).select(
+        F.pmod(F.xxhash64("id", F.lit(1)), F.lit(600)).alias("src"),
+        F.pmod(F.xxhash64("id", F.lit(2)), F.lit(300)).alias("dst"),
+    )
+    return verts, edges
+
+
+def test_yearly_walk_job_count_independent_of_years(spark):
+    """The yearly walk is ONE plan whatever the year list: the same number
+    of Spark jobs at 2 and at 6 years.  Broadcasts are pinned off, as the
+    benchmark runs the lifecycles, so the join strategies cannot move with
+    the data size."""
+    from graph_computing_go_spark.plans.yearly import yearly_entropy_pipeline
+
+    sc = spark.sparkContext
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    jobs = {}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        for n_years in (2, 6):
+            verts, edges = _lifecycle_inputs(spark, n_years)
+            years = list(range(2000, 2000 + n_years))
+            group = f"yearly-walk-{n_years}"
+            sc.setJobGroup(group, group)
+            out = yearly_entropy_pipeline(verts, edges, years=years)
+            assert {r["year"] for r in out.collect()} == set(years)
+            jobs[n_years] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        for k, val in prev.items():
+            if val is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, val)
+    assert jobs[2] == jobs[6], jobs
+
+
+def test_ladder_and_yearly_leave_no_cache(spark):
+    """Neither the percent ladder nor the yearly walk pins a cache past its
+    return: every RDD they leave persisted is a local checkpoint (retired
+    with its lineage), none a ``.cache()``."""
+    from graph_computing_go_spark.operators.graph import percent_ladder_stats
+    from graph_computing_go_spark.plans.yearly import yearly_entropy_pipeline
+
+    sc = spark.sparkContext
+    verts, edges = _lifecycle_inputs(spark, 3)
+    for fn in (
+        lambda: percent_ladder_stats(edges),
+        lambda: yearly_entropy_pipeline(verts, edges, years=[2000, 2002]),
+    ):
+        before = set(sc._jsc.getPersistentRDDs().keySet())
+        assert fn().collect()
+        persisted = sc._jsc.getPersistentRDDs()
+        left = [
+            persisted.get(i).rdd().toDebugString()
+            for i in persisted.keySet()
+            if i not in before and not persisted.get(i).rdd().isCheckpointed()
+        ]
+        assert not left, "\n\n".join(left)

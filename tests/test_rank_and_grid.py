@@ -6,10 +6,16 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from graph_computing_go_spark.functions.ngd import google_distance
-from graph_computing_go_spark.operators.graph import global_row_number
+from graph_computing_go_spark.operators.graph import (
+    current_in_degree,
+    global_row_number,
+    percent_ladder_stats,
+)
+from graph_computing_go_spark.session import is_cached
 
 
 def test_global_row_number_matches_sorted_order(spark):
@@ -90,6 +96,111 @@ def test_global_row_number_guard_fires_multi_partition(spark, monkeypatch):
 
     with _pytest.raises(pyspark.errors.PySparkException, match="2\\^33"):
         global_row_number(df, [F.asc("id")], "rank", num_partitions=2).collect()
+
+
+def test_global_row_number_grouped_matches_python(spark):
+    """group_cols: ranks restart at 1 per group, n_total is the group's row
+    count — groups straddling range partitions, a NULL group, and more
+    partitions than some groups have rows."""
+    rows = [(i, i * 37 % 11, None if i % 7 == 0 else i % 3) for i in range(300)]
+    df = spark.createDataFrame(rows, "id long, v long, g long")
+    for n_part in (1, 5):
+        got = {
+            r["id"]: (r["rank"], r["n_total"])
+            for r in global_row_number(
+                df,
+                [F.desc("v"), F.asc("id")],
+                group_cols=("g",),
+                num_partitions=n_part,
+            ).collect()
+        }
+        exp = {}
+        for g in {t[2] for t in rows}:
+            grp = sorted((t for t in rows if t[2] == g), key=lambda t: (-t[1], t[0]))
+            exp.update({t[0]: (k, len(grp)) for k, t in enumerate(grp, start=1)})
+        assert got == exp, n_part
+
+
+def test_global_row_number_cached_reshuffled_input(spark):
+    """Both consumers of the range-partitioned table (per-partition counts
+    and ordinals) must read ONE materialization: over a shuffle that reads
+    a cached relation, AQE re-runs the range exchange per consumer, the
+    re-sampled boundaries disagree, and ranks repeat or skip."""
+    from perfbench.inputs import link_graph
+
+    g = link_graph(spark, 60_000, 6_000, 5).cache()
+    indeg = current_in_degree(g)
+    got = {
+        r["id"]: r["rank"]
+        for r in global_row_number(
+            indeg, [F.desc("cnt"), F.asc("id")], num_partitions=8
+        ).collect()
+    }
+    rows = [(r["id"], r["cnt"]) for r in indeg.collect()]
+    order = sorted(rows, key=lambda t: (-t[1], t[0]))
+    assert got == {id_: k for k, (id_, _) in enumerate(order, start=1)}
+    g.unpersist()
+
+
+def _ladder_python(edges, percents):
+    """Top-p% slices of the in-degree ranking (count desc, id asc) and the
+    edges with both endpoints inside (wikiEntropy.go:281-310)."""
+    from collections import Counter
+
+    indeg = Counter(d for _, d in edges)
+    order = sorted(indeg, key=lambda i: (-indeg[i], i))
+    out = []
+    for p in percents:
+        top = set(order[: math.ceil(len(order) * p / 100)])
+        out.append((p, len(top), sum(s in top and d in top for s, d in edges)))
+    return sorted(out)
+
+
+def _random_edges(n_edges):
+    import random
+
+    rng = random.Random(3)
+    # multi-edges and self-loops included (the ladder counts edge rows); dst
+    # drawn from 40 of the 60 ids, so some sources are never ranked
+    return [(rng.randrange(60), rng.randrange(40)) for _ in range(n_edges)]
+
+
+@pytest.mark.parametrize(
+    "percents,n_edges,cached",
+    [
+        ((10, 20, 40, 60, 80, 100), 400, True),  # caller-owned cache survives
+        ((10, 50), 400, False),  # beyond-ladder vertices in no slice
+        ((60, 10, 100, 25), 400, False),  # unsorted ladder
+        ((10, 20, 40, 60, 80, 100), 0, False),  # empty graph: six zero rows
+    ],
+)
+def test_percent_ladder_matches_python(spark, percents, n_edges, cached):
+    rows = _random_edges(n_edges)
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    if cached:
+        edges = edges.cache()
+        edges.count()
+    got = sorted(tuple(r) for r in percent_ladder_stats(edges, percents).collect())
+    assert got == _ladder_python(rows, percents)
+    if cached:
+        assert is_cached(edges)
+        edges.unpersist()
+
+
+def test_percent_ladder_multi_partition_ranking_on_cached_graph(spark, monkeypatch):
+    """A caller-cached graph whose in-degree ranking spans several range
+    partitions (forced here; at scale, above ~1M ranked vertices) must give
+    the Python reference's slices."""
+    import graph_computing_go_spark.operators.graph as g
+    from perfbench.inputs import link_graph
+
+    monkeypatch.setattr(g, "RANK_ROWS_PER_PARTITION", 1000)
+    edges = link_graph(spark, 60_000, 6_000, 5).cache()
+    rows = [(r["src"], r["dst"]) for r in edges.collect()]
+    percents = (10, 20, 40, 60, 80, 100)
+    got = sorted(tuple(r) for r in percent_ladder_stats(edges, percents).collect())
+    assert got == _ladder_python(rows, percents)
+    edges.unpersist()
 
 
 def _ngd_python(edges, core, n):

@@ -22,6 +22,7 @@ AUDIT_QUERIES = [
     "discipline_distance_complexity",
     "google_distance",
     "subject_entropy_lifecycle",
+    "yearly_entropy",
     "code_edge_table",
     "lsh_ann_topk",
     "minhash_lsh",
