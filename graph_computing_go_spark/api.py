@@ -26,7 +26,7 @@ from graph_computing_go_spark.functions.entropy import (
 )
 from graph_computing_go_spark.functions.multilayer import multilayer_structural_entropy
 from graph_computing_go_spark.functions.ngd import google_distance
-from graph_computing_go_spark.session import eager_results
+from graph_computing_go_spark.session import compute_once
 from graph_computing_go_spark.operators.graph import (
     GRAPH_MOD,
     current_in_degree,
@@ -335,11 +335,11 @@ def q_distance_complexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_google_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 (wikipediaGoogleDistance.go:91-136), core = top-50 by in-degree."""
-    edges = derive_edges(spark, sf_dir).cache()
+    # the ranking, the vertex count and the NGD join all read the edges
+    edges = compute_once(derive_edges(spark, sf_dir))
     ranked = rank_by_in_degree(edges)
-    # ≤50 rows by construction; cache so the final NGD job reuses it instead
-    # of re-deriving the whole ranking lineage inside its semi-join
-    core = ranked.filter(F.col("rank") <= 50).select("id").cache()
+    # ≤50 rows by construction, read once (by the NGD's in-edge checkpoint)
+    core = ranked.filter(F.col("rank") <= 50).select("id")
     n = (
         # both endpoints in one scan of the edge table
         edges.select(F.explode(F.array("src", "dst")).alias("id")).distinct()
@@ -1476,16 +1476,18 @@ def q_discipline_distance_complexity(spark: SparkSession, sf_dir: str) -> DataFr
     # rows per map task before the exchange)
     labels = _vertex_labels(raw.select("src", "dst"))
     routed = route_edges_by_labels(raw, labels, carry_cols=("year",))
-    # cache the routed+grouped edge table: it feeds the canonical edges, the
+    # pin the routed+grouped edge table: it feeds the canonical edges, the
     # per-group max-id aggregates, AND the id/category derivation — without
-    # the cache the routing explode re-evaluates once per consumer
-    wedges = routed.groupBy(
-        "year",
-        "discipline",
-        F.greatest("src", "dst").alias("a"),
-        F.least("src", "dst").alias("b"),
-    ).agg(F.count("*").cast("double").alias("distance")).cache()
-    # one scan of the cached wedges instead of two (explode both endpoints)
+    # the pin the routing explode re-evaluates once per consumer
+    wedges = compute_once(
+        routed.groupBy(
+            "year",
+            "discipline",
+            F.greatest("src", "dst").alias("a"),
+            F.least("src", "dst").alias("b"),
+        ).agg(F.count("*").cast("double").alias("distance"))
+    )
+    # one scan of the pinned wedges instead of two (explode both endpoints)
     ids = wedges.select(
         "year", "discipline", F.explode(F.array("a", "b")).alias("id")
     ).distinct()
@@ -1505,12 +1507,6 @@ def q_discipline_distance_complexity(spark: SparkSession, sf_dir: str) -> DataFr
     df = distance_complexity(
         wedges, cats, group=["year", "discipline"], assume_canonical=True
     )
-    # df is materialized (localCheckpoint inside distance_complexity), so the
-    # routed-edge cache can retire with the call — except in the lazy
-    # plan-audit mode, where unpersisting pre-collect would drop the shared
-    # scan the un-materialized plan still needs
-    if eager_results():
-        wedges.unpersist()
     return df.select(
         "year",
         "discipline",
@@ -1739,7 +1735,8 @@ def q_yearly_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     percent ladder × {total, current} rank universes → per-slice entropies."""
     from graph_computing_go_spark.plans.yearly import yearly_entropy_pipeline
 
-    edges = derive_edges(spark, sf_dir).cache()
+    # the walk reads the edges twice: the year tags and the total in-degrees
+    edges = compute_once(derive_edges(spark, sf_dir))
     # every id the edges can hold (the oracle's endpoint set is a subset:
     # only endpoints ever meet an edge in the walk's joins) — no second
     # pass over the edge table for the vertex side
@@ -1980,7 +1977,8 @@ def q_subject_entropy_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     openAlexMultilayerSubjectEntropy.go:142-153)."""
     from graph_computing_go_spark.plans.subjects import subject_entropy_lifecycle
 
-    edges = derive_edges(spark, sf_dir).cache()
+    # the vertex ids and the lifecycle both read the edges
+    edges = compute_once(derive_edges(spark, sf_dir))
     ids = (
         # both endpoints in one scan of the edge table
         edges.select(F.explode(F.array("src", "dst")).alias("id")).distinct()
@@ -1995,12 +1993,7 @@ def q_subject_entropy_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("id") % 7 < 3, F.array(F.lit("gamma"))).otherwise(empty),
         ).alias("subjects"),
     )
-    df = subject_entropy_lifecycle(vertices, edges, _SUBJ_YEARS)
-    # df is materialized inside (localCheckpoint) — the edge cache can
-    # retire with the call; lazy plan-audit mode keeps it
-    if eager_results():
-        edges.unpersist()
-    return df
+    return subject_entropy_lifecycle(vertices, edges, _SUBJ_YEARS)
 
 
 # --------------------------------------------------------------------------

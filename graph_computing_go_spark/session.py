@@ -12,9 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the sandbox (local[N], 32 hw threads).  On a real
-# cluster the same code runs unchanged via spark-submit --py-files; only
-# master/shuffle-partitions change (bench.py demonstrates the N vs 4N runs).
+# Defaults chosen for local mode (local[N]).  On a real cluster the same
+# code runs unchanged via spark-submit --py-files; only master and
+# shuffle-partitions change.
 _DEFAULTS = {
     # Runtime re-planning: coalesce tiny shuffle partitions, split skewed ones.
     "spark.sql.adaptive.enabled": "true",

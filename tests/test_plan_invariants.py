@@ -156,6 +156,40 @@ def test_minhash_candidates_no_shingle_grain_exchange(spark, monkeypatch):
         assert "shingle" not in ln, ln
 
 
+def test_grid_self_pairs_spreads_mega_group(spark):
+    """The skew guard under every mega-group pair join (MinHash bands, and
+    NGD when the core outgrows one chunk): a 2000-member group's ~2M pairs
+    spread over the grid's tasks instead of landing in one.  Pinned as the
+    task spread (largest ``spark_partition_id`` share of the pair output),
+    not a wall time, plus the user-specified join-key exchange that keeps
+    AQE from coalescing the small join input into a handful of tasks."""
+    import re
+
+    from graph_computing_go_spark.operators.dedup import grid_self_pairs
+
+    n = 2000
+    df = (
+        spark.range(2 * n)
+        .select(
+            F.when(F.col("id") < n, F.lit(-1)).otherwise(F.col("id")).alias("key"),
+            F.col("id").alias("member"),
+        )
+        .repartition(4)
+    )
+    counts = grid_self_pairs(df, ["key"], "member", chunk=128).groupBy(
+        F.spark_partition_id().alias("pid")
+    ).count()
+    per_task = [r["count"] for r in counts.collect()]
+    assert sum(per_task) == n * (n - 1) // 2, per_task
+    assert max(per_task) / sum(per_task) <= 0.5, per_task
+    plan = _plan(counts)
+    assert re.search(
+        r"Exchange hashpartitioning\(key#\d+L?, __gi#\d+, __gj#\d+, \d+\), "
+        r"REPARTITION_BY_NUM",
+        plan,
+    ), plan
+
+
 def test_single_scan_expansions_have_no_union(spark):
     """The round-4 explode rewrites (PERF.md §15): corner/endpoint
     expansion must be a Generate over ONE scan, never a Union re-executing
@@ -533,18 +567,36 @@ def test_yearly_walk_job_count_independent_of_years(spark):
 
 
 def test_ladder_and_yearly_leave_no_cache(spark):
-    """Neither the percent ladder nor the yearly walk pins a cache past its
+    """Neither the percent ladder, the yearly walk, nor the registered
+    queries that derive their own edge tables pin a cache past their
     return: every RDD they leave persisted is a local checkpoint (retired
-    with its lineage), none a ``.cache()``."""
+    with its lineage), none a ``.cache()``.  A query-owned ``.cache()``
+    sits on the session's shared plan-keyed entry, where a later query's
+    cache/unpersist of the same derived table adopts or evicts it."""
+    import os
+
+    from graph_computing_go_spark.api import QUERIES
     from graph_computing_go_spark.operators.graph import percent_ladder_stats
     from graph_computing_go_spark.plans.yearly import yearly_entropy_pipeline
 
     sc = spark.sparkContext
     verts, edges = _lifecycle_inputs(spark, 3)
-    for fn in (
+    calls = [
         lambda: percent_ladder_stats(edges),
         lambda: yearly_entropy_pipeline(verts, edges, years=[2000, 2002]),
-    ):
+    ]
+    sf_dir = "/root/testdata/sf0.001"
+    if os.path.isdir(sf_dir):
+        calls += [
+            lambda q=q: QUERIES[q](spark, sf_dir)
+            for q in (
+                "google_distance",
+                "yearly_entropy",
+                "subject_entropy_lifecycle",
+                "discipline_distance_complexity",
+            )
+        ]
+    for fn in calls:
         before = set(sc._jsc.getPersistentRDDs().keySet())
         assert fn().collect()
         persisted = sc._jsc.getPersistentRDDs()
