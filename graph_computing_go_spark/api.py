@@ -210,10 +210,11 @@ def q_structural_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _vertices_with_cats(edges: DataFrame) -> DataFrame:
+def _vertices_with_cats(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """(id, cats = [chr(97 + id % 3)]) for every endpoint ``a``/``b``."""
     ids = (
         # both endpoints in one scan of the edge table
-        edges.select(F.explode(F.array("src", "dst")).alias("id")).distinct()
+        edges.select(F.explode(F.array(a, b)).alias("id")).distinct()
     )
     return ids.select(
         "id", F.array(F.chr(F.lit(97) + (F.col("id") % 3))).alias("cats")
@@ -298,12 +299,10 @@ def q_multilayer_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_distance_complexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6/A7 (distanceComplexity.go:151-287) on weighted derived edges."""
     wedges = derive_wedges(spark, sf_dir)
-    ids = wedges.select(F.explode(F.array("a", "b")).alias("id")).distinct()
-    cats = ids.select(
-        "id", F.array(F.chr(F.lit(97) + (F.col("id") % 3))).alias("cats")
-    )
     # derive_wedges emits one (a>b) row per undirected edge by construction
-    df = distance_complexity(wedges, cats, assume_canonical=True)
+    df = distance_complexity(
+        wedges, _vertices_with_cats(wedges, "a", "b"), assume_canonical=True
+    )
     return df.select(F.round("big", 6).alias("big"), F.round("little", 6).alias("little"))
 
 

@@ -43,8 +43,12 @@ tests/test_goldens_distance.py::test_grouped_equals_per_group.
 
 Scale: big is one explode-both-directions + one groupBy(group..., node)
 using the one-pass identity H = log2(R) - sum(w log2 w)/R; little is the
-same shape grouped by (group..., module, node) then (group..., module).  No
-driver-side iteration at any group count.
+same shape grouped by (group..., module, node) then (group..., module),
+then the fold.  No driver-side iteration at any group count.  The node
+table, the endpoint joins (one per side, which also fan the edges out over
+copies) and the fold are the category-module core shared with multilayer
+entropy (``functions/multilayer.py``); this module keeps only its quirks:
+the a-side-only copy fan-out and the weighted per-module terms.
 """
 
 from __future__ import annotations
@@ -52,8 +56,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_computing_go_spark.operators.graph import global_row_number
-from graph_computing_go_spark.session import compute_once, eager_results, is_cached
+from graph_computing_go_spark.functions.entropy import _hist_entropy
+from graph_computing_go_spark.functions.multilayer import (
+    category_nodes,
+    module_little,
+    tag_endpoint,
+)
+from graph_computing_go_spark.session import compute_once, eager_results
 
 
 def _canonical(wedges: DataFrame, group: list[str]) -> DataFrame:
@@ -67,89 +76,12 @@ def _canonical(wedges: DataFrame, group: list[str]) -> DataFrame:
     ).dropDuplicates([*group, "a", "b"])
 
 
-def _with_copies(wedges: DataFrame, categories: DataFrame, group: list[str]):
-    """Apply the category-copy quirk; return (edges, node_cat(group..., id, cat)).
-
-    Copy ids are ``per-group max id + a globally unique positive rank`` —
-    unique within the group and above every original id there, which is all
-    the math needs (copy ids never appear in the output)."""
-    if group:
-        max_c = categories.groupBy(*group).agg(
-            F.coalesce(F.max("id"), F.lit(0)).alias("__mc")
-        )
-        max_e = wedges.groupBy(*group).agg(
-            F.coalesce(F.greatest(F.max("a"), F.max("b")), F.lit(0)).alias("__me")
-        )
-        max_df = (
-            max_c.join(max_e, list(group), "full")
-            .select(
-                *group,
-                F.greatest(
-                    F.coalesce("__mc", F.lit(0)), F.coalesce("__me", F.lit(0))
-                ).alias("__max_id"),
-            )
-        )
-    else:
-        # lazy max-id: 1-row aggregates broadcast-crossJoined instead of two
-        # eager collect jobs per invocation
-        max_c = categories.agg(
-            F.coalesce(F.max("id"), F.lit(0)).alias("__mc")
-        )
-        max_e = wedges.agg(
-            F.coalesce(F.greatest(F.max("a"), F.max("b")), F.lit(0)).alias("__me")
-        )
-        max_df = max_c.crossJoin(max_e).select(
-            F.greatest("__mc", "__me").alias("__max_id")
-        )
-
-    multi = categories.filter(F.size("cats") > 1)
-    # fresh ids via the range-partitioned global rank — same (group..., id,
-    # pos) asc ordering as a single global window would give (goldens are
-    # bit-identical), but scale-safe when most nodes carry 2+ categories
-    ranked = global_row_number(
-        multi.select(*group, "id", F.posexplode("cats").alias("pos", "cat")).filter(
-            F.col("pos") >= 1
-        ),
-        [*[F.asc(g) for g in group], F.asc("id"), F.asc("pos")],
-        "__rn",
-    )
-    if group:
-        # max_df is GROUP-grain (one row per work key — bounded by the
-        # number of (year, discipline) keys, never by graph size), so
-        # broadcasting is safe and saves a shuffle of the ranked copies;
-        # the no-vertex-grain-broadcast invariant does not apply
-        copies = ranked.join(F.broadcast(max_df), list(group))
-    else:
-        copies = ranked.crossJoin(F.broadcast(max_df))
-    # copies feeds the node table AND the copy edges: ranked once
-    copies = compute_once(
-        copies.withColumn("copy_id", F.col("__max_id") + F.col("__rn")).drop(
-            "__max_id", "__rn"
-        )
-    )
-    node_cat = categories.select(
-        *group, "id", F.element_at("cats", 1).alias("cat")
-    ).unionByName(copies.select(*group, F.col("copy_id").alias("id"), "cat"))
-
-    # a-side-only duplication (distanceComplexity.go:109).  cm is
-    # (multi-category)-VERTEX-grain — no broadcast hint (the repo-wide ban:
-    # a taxonomy where most vertices carry 2+ categories makes it
-    # data-sized and a forced broadcast OOMs); AQE broadcast-converts it at
-    # runtime when its measured size is genuinely small.
-    cm = copies.select(*group, F.col("id").alias("a"), "copy_id")
-    copy_edges = wedges.join(cm, [*group, "a"]).select(
-        *group, F.col("copy_id").alias("a"), "b", "w"
-    )
-    return wedges.unionByName(copy_edges), node_cat
-
-
-def _node_entropy(incident: DataFrame, group: list[str]) -> DataFrame:
-    """Per (group..., id): s = sum w, h = -sum (w/s) log2(w/s), one pass."""
-    return incident.groupBy(*group, "id").agg(
-        F.sum("w").alias("s"),
-        (
-            F.log2(F.sum("w")) - F.sum(F.col("w") * F.log2("w")) / F.sum("w")
-        ).alias("h"),
+def _node_entropy(incident: DataFrame, keys: list[str]) -> DataFrame:
+    """Per ``keys``: __s = sum w, __hn = -sum (w/s) log2(w/s), one pass."""
+    w = F.col("w")
+    return incident.groupBy(*keys).agg(
+        F.sum(w).alias("__s"),
+        _hist_entropy(F.sum(w * F.log2(w)), F.sum(w)).alias("__hn"),
     )
 
 
@@ -178,147 +110,62 @@ def distance_complexity(
         )
     else:
         e = _canonical(wedges, group)
-    node_cat = None
-    cats_preowned = False
+    nodes = None
     if categories is not None:
-        # categories feeds the max-id aggregate, the multi-cat copy
-        # derivation, AND the node→cat table — without a cache the caller's
-        # plan (typically a distinct over the edge-endpoint union) re-executes
-        # per consumer (measured 3 redundant exchanges at sf0.1).  If the
-        # CALLER already persisted it, reuse their cache and never unpersist
-        # it — cache()/unpersist() act on the shared plan entry, and evicting
-        # a caller-owned persistence from inside the API would silently
-        # deoptimize their other consumers.
-        cats_preowned = is_cached(categories)
-        if not cats_preowned:
-            categories = categories.cache()
-        e, node_cat = _with_copies(e, categories, group)
-    # cache partitioned on the a-side tag-join key: the join below then
-    # probes it exchange-free, and every consumer reads uniform partitions
-    # instead of the ragged union layout
-    e = e.repartition(
-        int(wedges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
-        *group,
-        "a",
-    ).cache()
+        # big has no membership check, so copy ids must clear the edge
+        # endpoints too (a = the larger id of a canonical edge)
+        nodes = category_nodes(
+            categories, group, e.select(*group, F.col("a").alias("id"))
+        )
+        # a-side-only duplication (distanceComplexity.go:109): a copy shares
+        # the edges where its vertex is the larger id, so only the a-side
+        # join fans out.  Left joins: big keeps every edge, tagged or not
+        e = tag_endpoint(e, nodes, group, "a", "__ca", True, "left")
+        e = tag_endpoint(e, nodes, group, "b", "__cb", False, "left")
+    # e feeds big AND the module terms
+    e = compute_once(e)
 
-    # ---- big: no membership check, copies' shared maps already materialized.
-    # explode(array(a, b)) emits both endpoints in ONE scan of the edge cache
-    # — the union-of-two-selects formulation reads it twice (2x cache scans
-    # and map tasks for identical shuffle bytes)
-    incident = e.select(
-        *group, F.explode(F.array("a", "b")).alias("id"), "w"
+    # ---- big: no membership check, copies' shared maps already included.
+    # explode(array(a, b)) emits both endpoints in ONE scan of the edge pin
+    per_node = _node_entropy(
+        e.select(*group, F.explode(F.array("a", "b")).alias("__v"), "w"),
+        [*group, "__v"],
     )
-    per_node = _node_entropy(incident, group)
     big = per_node.groupBy(*group).agg(
-        (F.sum(F.col("h") * F.col("s")) / F.sum("s")).alias("big")
+        (F.sum(F.col("__hn") * F.col("__s")) / F.sum("__s")).alias("big")
     )
 
-    if node_cat is None:
-        out = big.select(
-            *group, "big", F.lit(None).cast("double").alias("little")
-        )
-        # group-grain scalar result: materialize so the edge cache retires
-        # with the call (same hygiene as dedup_clusters — no internal cache
-        # outlives the function in a long driver session); SPARK_GRAFT_EAGER=0
-        # keeps it lazy for the plan audit
-        if eager_results():
-            out = out.localCheckpoint()
-            e.unpersist()
-        return out
-
-    # vertex-grain table: NO broadcast hint (billion-vertex OOM risk — the
-    # copy maps above are likewise unhinted now; AQE runtime-converts small
-    # sides).  Cache it partitioned on the join key: it is probed twice
-    # (a-side, b-side — alias-aware output partitioning carries the
-    # hash(group..., id) layout through both renames), and its lineage
-    # contains the whole copy/row-number machinery, which would otherwise
-    # re-execute per join (measured at sf0.1: the two tag joins were the
-    # single most expensive stage group of the grouped lifecycle query).
-    nc = node_cat.repartition(
-        int(wedges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
-        *group,
-        "id",
-    ).cache()
-    # tagged feeds the intra AND cross aggregations
-    tagged = compute_once(
-        e.join(
-            nc.select(*group, F.col("id").alias("a"), F.col("cat").alias("cat_a")),
-            [*group, "a"],
-        ).join(
-            nc.select(*group, F.col("id").alias("b"), F.col("cat").alias("cat_b")),
-            [*group, "b"],
-        )
-    )
-
-    intra = tagged.filter(F.col("cat_a") == F.col("cat_b"))
-    intra_incident = intra.select(
-        *group,
-        F.col("cat_a").alias("cat"),
-        F.explode(F.array("a", "b")).alias("id"),
-        "w",
-    )
-    node_h = _node_entropy(intra_incident, [*group, "cat"])
-    # hModule = sum_i (s_i / inner) * h_i with inner = 2*sum(intra w); each
-    # intra edge contributes w to BOTH endpoints' s, so sum_i s_i == inner —
-    # one aggregation over node_h replaces the separate module-sum pass over
-    # the edge cache AND the (module)-key join that fed it
-    h_module = node_h.groupBy(*group, "cat").agg(
-        (F.sum(F.col("s") * F.col("h")) / F.sum("s")).alias("h_module"),
-        F.sum("s").alias("inner"),
-    )
-    cross = tagged.filter(F.col("cat_a") != F.col("cat_b"))
-    outer = (
-        cross.select(
-            *group, F.explode(F.array("cat_a", "cat_b")).alias("cat"), "w"
-        )
-        .groupBy(*group, "cat")
-        .agg(F.sum("w").alias("outer"))
-    )
-    # every module with an intra OR a cross edge, each aggregate consumed
-    # ONCE.  vall = 2*sum(all w) = sum(inner) + sum(outer) over ALL modules
-    # (every intra edge's 2w lands in exactly one module's inner, every
-    # cross edge's w in both its endpoints' outer), and with vall pulled
-    # out of the per-module terms
-    #   little = (sum h*inner - sum outer*log2(inner) + log2(vall)*sum outer) / vall
-    # over the modules WITH intra edges (cross-only modules are dropped,
-    # :195) — so vall and little come out of ONE aggregation per group
-    # instead of a module-sum pass, a join back and a second pass.  A group
-    # with no intra edge at all gets a NULL little, as before.
-    mods = h_module.join(outer, [*group, "cat"], "full").select(
-        *group, "h_module", "inner", F.coalesce("outer", F.lit(0.0)).alias("outer")
-    )
-    has_inner = F.col("inner").isNotNull()
-    sums = mods.groupBy(*group).agg(
-        F.sum(F.col("h_module") * F.col("inner")).alias("__hi"),
-        F.sum(F.when(has_inner, F.col("outer") * F.log2("inner"))).alias("__oli"),
-        F.sum(F.when(has_inner, F.col("outer"))).alias("__oi"),
-        (
-            F.coalesce(F.sum("inner"), F.lit(0.0)) + F.sum("outer")
-        ).alias("vall"),
-    )
-    little = sums.select(
-        *group,
-        (
-            (F.col("__hi") - F.col("__oli") + F.log2("vall") * F.col("__oi"))
-            / F.col("vall")
-        ).alias("little"),
-    )
-    if group:
-        out = big.join(little, list(group), "left").select(
-            *group, "big", "little"
-        )
+    if nodes is None:
+        out = big.select(*group, "big", F.lit(None).cast("double").alias("little"))
     else:
-        out = big.crossJoin(little)
-    # one row per group: localCheckpoint is a trivially small materialization
-    # and lets the internal caches retire NOW instead of accreting across a
-    # 50-query driver session (the conftest driver-memory bump this module's
-    # family forced is exactly that accretion); SPARK_GRAFT_EAGER=0 keeps it
-    # lazy for the plan audit
-    if eager_results():
-        out = out.localCheckpoint()
-        nc.unpersist()
-        if not cats_preowned:
-            categories.unpersist()
-        e.unpersist()
-    return out
+        # ONE aggregation over the edges between known nodes: an intra
+        # edge is incident on both endpoints inside its module, a cross
+        # edge adds its weight to each endpoint's module (__v NULL).  Per
+        # module: h = sum_i (s_i/inner) H_i with inner = sum_i s_i
+        # (= 2*sum intra w), outer = the cross weight
+        ca, cb, w = F.col("__ca"), F.col("__cb"), F.col("w")
+
+        def inc(m, v):
+            return F.struct(m.alias("__m"), v.alias("__v"), w.alias("w"))
+
+        no_node = F.lit(None).cast("long")
+        incident = e.dropna(subset=["__ca", "__cb"]).select(
+            *group,
+            F.explode(
+                F.when(ca == cb, F.array(inc(ca, F.col("a")), inc(ca, F.col("b"))))
+                .otherwise(F.array(inc(ca, no_node), inc(cb, no_node)))
+            ).alias("__i"),
+        ).select(*group, "__i.*")
+        node_h = _node_entropy(incident, [*group, "__m", "__v"])
+        s, intra = F.col("__s"), F.col("__v").isNotNull()
+        mods = node_h.groupBy(*group, "__m").agg(
+            (
+                F.sum(F.when(intra, s * F.col("__hn"))) / F.sum(F.when(intra, s))
+            ).alias("__h"),
+            F.sum(F.when(intra, s)).alias("__vol"),
+            F.sum(F.when(~intra, s)).alias("__g"),
+        )
+        out = big.join(module_little(mods, group), group or None, "left")
+    # one row per group: materialize so the pins retire with the call
+    # (SPARK_GRAFT_EAGER=0 keeps it lazy for the plan audit)
+    return out.localCheckpoint() if eager_results() else out

@@ -1,4 +1,5 @@
-"""Multilayer (partitioned) structural entropy — reference op A5.
+"""Multilayer (partitioned) structural entropy — reference op A5 — and the
+category-module core it shares with distance complexity (A6/A7).
 
 Faithful DataFrame re-expression of
 /root/reference/internal/entropy/entropy.go:46-164:
@@ -20,17 +21,38 @@ Faithful DataFrame re-expression of
    (modules with vol_j = 0 are skipped, entropy.go:155-157);
    big = whole-graph in-degree structural entropy.
 
+Distance complexity's ``little`` (distanceComplexity.go:91-287) is the same
+algorithm with a different per-module entropy, so the three steps it shares
+with this one live here, once, and ``distance_complexity`` imports them:
+
+- ``category_nodes``: one row per vertex — its first category and its
+  copies (fresh ids, one per further category) — from ONE posexplode_outer
+  of ``cats``, pinned;
+- ``tag_endpoint``: ONE join per edge endpoint against that pin tags the
+  endpoint with its module and, where the caller's quirk says so, fans the
+  edge out over the endpoint's copies — no separate copy join;
+- ``module_little``: ONE aggregation per group folds per-module
+  (h, vol, g) into little.
+
+Each caller keeps only its own quirk: which endpoints fan out over copies
+(both here, the a-side only in distance complexity) and the per-module
+h/vol/g (the in-degree entropy here, the weighted node entropies there).
+Internal columns are ``__``-prefixed so a caller's group key cannot clash.
+
 Golden parity: entropy_test.go:18 (1.504751568) and :30-31
 (1.612197223 / 2.636056086), both +-1e-9 — see tests/test_goldens_entropy.py.
 
-Scale notes: copies are produced with one narrow posexplode + a
-range-partitioned global rank (``operators/graph.global_row_number``) over
-the multi-category subset — no single-partition window even when most
-vertices carry 2+ categories; edge expansion is two broadcast-able
-joins against the copy map (crossing vertices are rare in real taxonomies);
-the per-module entropies are ONE groupBy(cat, dst) + ONE groupBy(cat) — no
-per-module jobs, no driver loop over modules (the reference spawns a
-goroutine per module; Catalyst gets the same parallelism from the shuffle).
+Scale notes: copy ids come from a range-partitioned global rank
+(``operators/graph.global_row_number``) over the multi-category subset —
+no single-partition window even when most vertices carry 2+ categories;
+the per-module terms are ONE groupBy(module, node) + ONE groupBy(module) +
+the fold — no per-module jobs, no driver loop over modules (the reference
+spawns a goroutine per module; Catalyst gets the same parallelism from the
+shuffle).  Every shared table is a ``session.compute_once`` pin, never a
+``.cache()``, and none is pre-partitioned: under AQE a checkpoint reports
+no output partitioning, so a repartition inside the pin would add a
+shuffle and spare none.  Both endpoint joins here read the same node
+columns, so AQE reuses one exchange of the node table for the two.
 """
 
 from __future__ import annotations
@@ -38,90 +60,107 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_computing_go_spark.functions.entropy import _hist_entropy
 from graph_computing_go_spark.operators.graph import global_row_number
 from graph_computing_go_spark.session import compute_once, eager_results
 
 
-def _expanded_graph(vertices: DataFrame, edges: DataFrame):
-    """Apply category-copy + shrink; return (nodes(id, cat), efull(src, dst))."""
-    # max(id) rides along as a broadcast 1-row crossJoin: keeps the whole
-    # query lazy (no separate collect job per invocation)
-    max_df = vertices.agg(F.max("id").alias("__max_id"))
+def category_nodes(
+    cats: DataFrame, group: list[str], other_ids: DataFrame | None = None
+) -> DataFrame:
+    """(group…, id, __cat, __copies) — one row per vertex: its first
+    category, and its copies as array<struct<id, cat>>, one per further
+    category; pinned.
 
-    base = vertices.select("id", F.element_at("cats", 1).alias("cat"))
-    multi = vertices.filter(F.size("cats") > 1)
-    # fresh ids via the range-partitioned global rank (same (id, pos) asc
-    # ordering the old global window gave, so assigned ids — and therefore
-    # goldens — are bit-identical), never a single-partition window: a
-    # taxonomy where most vertices carry 2+ categories makes this data-sized.
-    # copies feeds the node table AND both sides' copy lists: ranked once
-    copies = compute_once(
-        global_row_number(
-            multi.select("id", F.posexplode("cats").alias("pos", "cat")).filter(
-                F.col("pos") >= 1
-            ),
-            [F.asc("id"), F.asc("pos")],
-            "__rn",
-        )
-        .crossJoin(F.broadcast(max_df))
-        .withColumn("copy_id", F.col("__max_id") + F.col("__rn"))
-        .drop("__max_id", "__rn")
+    Copy ids are ``per-group max id + a global rank`` in (group…, id,
+    position) order: unique within the group and above every id there,
+    including ``other_ids`` (group…, id) — ids that never sit in ``cats``
+    but must not collide with a copy.  Copy ids never reach any output."""
+    # ONE read of the caller's table feeds the max id, the copies AND the
+    # node table; posexplode_outer keeps vertices with no category (a NULL
+    # module that tags nothing), so their ids still bound the copy ids
+    x = compute_once(
+        cats.select(*group, "id", F.posexplode_outer("cats").alias("__pos", "__cat"))
     )
-    nodes = base.unionByName(
-        copies.select(F.col("copy_id").alias("id"), "cat")
+    ids = x.select(*group, "id")
+    if other_ids is not None:
+        ids = ids.unionByName(other_ids)
+    # group-grain (one row per work key), so it may broadcast
+    top = ids.groupBy(*group).agg(F.max("id").alias("__top"))
+    ranked = global_row_number(
+        x.filter(F.col("__pos") >= 1),
+        [*[F.asc(g) for g in group], F.asc("id"), F.asc("__pos")],
+        "__rn",
+    )
+    copies = ranked.join(F.broadcast(top), group or None).select(
+        *group,
+        "id",
+        F.struct(
+            (F.col("__top") + F.col("__rn")).alias("id"), F.col("__cat").alias("cat")
+        ).alias("__copy"),
+    )
+    base = x.filter(F.coalesce("__pos", F.lit(0)) == 0).select(
+        *group, "id", "__cat"
+    )
+    return compute_once(
+        base.unionByName(copies, allowMissingColumns=True)
+        .groupBy(*group, "id")
+        .agg(F.max("__cat").alias("__cat"), F.collect_list("__copy").alias("__copies"))
     )
 
-    # shrink: drop edges to unknown vertices (copies are never referenced by
-    # raw out-lists, so membership against the ORIGINAL vertex set suffices)
-    e0 = edges.join(
-        vertices.select(F.col("id").alias("dst")), "dst", "left_semi"
-    ).join(vertices.select(F.col("id").alias("src")), "src", "left_semi")
 
-    # both-side copy fan-out in ONE pass: per-vertex copy LISTS left-join
-    # each side, then explode(self ++ copies).  The previous union-of-unions
-    # shape (e0 ∪ e0⋈cm, then that ∪ that⋈cm) re-executed the double
-    # semi-join FOUR times per materialization of e_full; this lineage
-    # executes it once.  Row multiset is identical: (u,v) expands to
-    # {u}+copies(u) × {v}+copies(v).  cmg is (multi-category)-VERTEX-grain
-    # — no broadcast hint (repo-wide ban: a taxonomy where most of a large
-    # vertex set carries 2+ categories makes it data-sized, and a forced
-    # broadcast OOMs where AQE would degrade to a shuffle join gracefully);
-    # AQE broadcast-converts it at runtime when genuinely small.
-    cmg = copies.groupBy(F.col("id").alias("orig")).agg(
-        F.collect_list("copy_id").alias("__copies")
+def tag_endpoint(
+    edges: DataFrame,
+    nodes: DataFrame,
+    group: list[str],
+    side: str,
+    module: str,
+    copies: bool,
+    how: str,
+) -> DataFrame:
+    """``edges`` with ``module``: the module of endpoint ``side``, NULL for
+    a vertex with no category (or, under a left join, outside the node
+    table).  With ``copies``, an edge also repeats once per copy of that
+    endpoint, the copy in its place under the copy's module — a copy
+    shares its vertex's edges on this side.  ONE join per endpoint does the
+    copy fan-out AND the tagging.  The node table is vertex-grain: NO
+    broadcast hint (a taxonomy where most vertices carry 2+ categories
+    makes it data-sized; AQE broadcast-converts it when genuinely small)."""
+    n = nodes.select(*group, F.col("id").alias(side), "__cat", "__copies")
+    own = F.struct(F.col(side).cast("long").alias("id"), F.col("__cat").alias("cat"))
+    extra = F.coalesce("__copies", F.array().cast(n.schema["__copies"].dataType))
+    node = F.explode(F.concat(F.array(own), extra)) if copies else own
+    rest = [c for c in edges.columns if c != side]
+    return (
+        edges.join(n, [*group, side], how)
+        .select(*rest, node.alias("__n"))
+        .select(*rest, F.col("__n.id").alias(side), F.col("__n.cat").alias(module))
     )
-    no_copies = F.array().cast("array<long>")
-    e_src = e0.join(cmg, e0.src == cmg.orig, "left").select(
-        F.explode(
-            F.concat(
-                F.array(F.col("src").cast("long")),
-                F.coalesce("__copies", no_copies),
+
+
+def module_little(mods: DataFrame, group: list[str]) -> DataFrame:
+    """(group…, little) from per-module (group…, __h, __vol, __g): module
+    entropy, intra volume (NULL for a module with only cross edges) and
+    cross weight.  With m = sum(vol) + sum(g) pulled out of the per-module
+    terms,
+      little = (sum h*vol - sum g*log2(vol) + log2(m)*sum g) / m
+    over the modules with a volume (entropy.go:155-157 skips vol = 0;
+    distanceComplexity.go:195 iterates the intra map), so m and little come
+    out of ONE aggregation per group.  A group with no intra edge at all
+    gets a NULL little."""
+    vol = F.col("__vol")
+    g = F.coalesce("__g", F.lit(0.0))
+    has_vol = vol.isNotNull()
+    m = F.coalesce(F.sum(vol), F.lit(0.0)) + F.sum(g)
+    return mods.groupBy(*group).agg(
+        (
+            (
+                F.sum(F.col("__h") * vol)
+                - F.sum(F.when(has_vol, g * F.log2(vol)))
+                + F.log2(m) * F.sum(F.when(has_vol, g))
             )
-        ).alias("src"),
-        "dst",
-    )
-    e_full = e_src.join(cmg, e_src.dst == cmg.orig, "left").select(
-        "src",
-        F.explode(
-            F.concat(
-                F.array(F.col("dst").cast("long")),
-                F.coalesce("__copies", no_copies),
-            )
-        ).alias("dst"),
-    )
-    return nodes, e_full
-
-
-def _in_entropy(edges: DataFrame, group: list[str]) -> DataFrame:
-    """Unnormalized in-degree structural entropy per group (or global).
-    Also emits ``S`` (= edge count of the group: sum of in-degrees) — the
-    per-module volume falls out of the same aggregation for free."""
-    indeg = edges.groupBy(*group, "dst").agg(F.count("*").cast("double").alias("d"))
-    agg = indeg.groupBy(*group).agg(
-        F.sum("d").alias("S"), F.sum(F.col("d") * F.log2("d")).alias("dlogd")
-    )
-    return agg.select(
-        *group, (F.log2("S") - F.col("dlogd") / F.col("S")).alias("h"), "S"
+            / m
+        ).alias("little")
     )
 
 
@@ -133,68 +172,45 @@ def multilayer_structural_entropy(
     ``vertices``: (id: long, cats: array<string>, non-empty);
     ``edges``: (src, dst) — out-lists already normalized to one row per edge.
     """
-    nodes, e_full = _expanded_graph(vertices, edges)
-    # e_full feeds the whole-graph entropy AND the tag joins
-    e_full = compute_once(e_full)
+    nodes = category_nodes(vertices, [])
+    # shrink + both-side copy fan-out + tagging, one inner join per side:
+    # an edge to an unknown vertex finds no node row (copies are never
+    # referenced by raw out-lists, so membership against the ORIGINAL
+    # vertices suffices), and (u,v) expands to {u}+copies(u) ×
+    # {v}+copies(v), each node under its own module.  e_full feeds the
+    # whole-graph entropy AND the module terms
+    e_src = tag_endpoint(
+        edges.select("src", "dst"), nodes, [], "src", "__ca", True, "inner"
+    )
+    e_full = compute_once(tag_endpoint(e_src, nodes, [], "dst", "__cb", True, "inner"))
 
-    big = _in_entropy(e_full, []).select(F.col("h").alias("big"))
-
-    # vertex-grain table: NO broadcast hint — at billion-vertex scale it
-    # cannot fit executor memory; AQE picks broadcast when genuinely small.
-    # Cache it pre-partitioned on the join key (its lineage contains the
-    # whole copy/row-number machinery, which would otherwise re-execute per
-    # tag join; alias-aware output partitioning carries hash(id) through
-    # both the src and dst renames, so neither probe shuffles it — same
-    # shape as distance_complexity).
-    n = nodes.repartition(
-        int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
-        "id",
-    ).cache()
-    # tagged feeds the intra AND cross aggregations
-    tagged = compute_once(
-        e_full.join(n.select(F.col("id").alias("src"), F.col("cat").alias("cat_src")), "src")
-        .join(n.select(F.col("id").alias("dst"), F.col("cat").alias("cat_dst")), "dst")
+    indeg = e_full.groupBy("dst").agg(F.count("*").cast("double").alias("__d"))
+    big = indeg.agg(
+        _hist_entropy(F.sum(F.col("__d") * F.log2("__d")), F.sum("__d")).alias("big")
     )
 
-    intra = tagged.filter(F.col("cat_src") == F.col("cat_dst"))
-    # h AND vol from ONE aggregation chain: vol_j (intra edge count) is the
-    # sum of module-j in-degrees, which _in_entropy already computes as S
-    mod = _in_entropy(intra.withColumnRenamed("cat_src", "cat"), ["cat"]).select(
-        "cat", "h", F.col("S").alias("vol")
+    # ONE aggregation over the tagged edges between modules: an intra edge
+    # is an in-edge of its dst inside the module, a cross edge counts once
+    # for its src module (__v NULL) — h and vol from the (module, dst)
+    # in-degrees, g from the rest
+    per_node = (
+        e_full.dropna(subset=["__ca", "__cb"])
+        .groupBy(
+            F.col("__ca").alias("__m"),
+            F.when(F.col("__ca") == F.col("__cb"), F.col("dst")).alias("__v"),
+        )
+        .agg(F.count("*").cast("double").alias("__d"))
     )
-    mod_g = (
-        tagged.filter(F.col("cat_src") != F.col("cat_dst"))
-        .groupBy(F.col("cat_src").alias("cat"))
-        .agg(F.count("*").cast("double").alias("g"))
+    d = F.col("__d")
+    intra = F.col("__v").isNotNull()
+    mods = per_node.groupBy("__m").agg(
+        _hist_entropy(
+            F.sum(F.when(intra, d * F.log2(d))), F.sum(F.when(intra, d))
+        ).alias("__h"),
+        F.sum(F.when(intra, d)).alias("__vol"),
+        F.sum(F.when(~intra, d)).alias("__g"),
     )
-    # every module with an intra OR a cross edge, each aggregate consumed
-    # ONCE: m = |E'| = sum(vol) + sum(g) (every expanded edge is intra in
-    # exactly one module or cross, counted once by its src module), and
-    # with m pulled out of the per-module terms
-    #   little = (sum h*vol - sum g*log2(vol) + log2(m)*sum g) / m
-    # over the modules with vol (entropy.go:155-157 skips vol = 0), so m
-    # and little come out of ONE aggregation over the joined modules
-    mods = mod.join(mod_g, "cat", "full").select(
-        "h", "vol", F.coalesce("g", F.lit(0.0)).alias("g")
-    )
-    has_vol = F.col("vol").isNotNull()
-    sums = mods.agg(
-        F.sum(F.col("h") * F.col("vol")).alias("__hv"),
-        F.sum(F.when(has_vol, F.col("g") * F.log2("vol"))).alias("__glv"),
-        F.sum(F.when(has_vol, F.col("g"))).alias("__gv"),
-        (F.coalesce(F.sum("vol"), F.lit(0.0)) + F.sum("g")).alias("m"),
-    )
-    little = sums.select(
-        (
-            (F.col("__hv") - F.col("__glv") + F.log2("m") * F.col("__gv"))
-            / F.col("m")
-        ).alias("little")
-    )
-    # one-row scalar result: materialize so the vertex cache retires with
-    # the call instead of accreting across a 50-query driver session
+    out = big.crossJoin(module_little(mods, []))
+    # one-row scalar: materialize so the pins retire with the call
     # (SPARK_GRAFT_EAGER=0 keeps it lazy for the plan audit)
-    out = big.crossJoin(little)
-    if eager_results():
-        out = out.localCheckpoint()
-        n.unpersist()
-    return out
+    return out.localCheckpoint() if eager_results() else out

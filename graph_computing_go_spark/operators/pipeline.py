@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from graph_computing_go_spark.operators.dedup import dedup_clusters
 from graph_computing_go_spark.operators.text import language_id, quality_score
+from graph_computing_go_spark.session import compute_once, eager_results
 
 
 def prepare_training_corpus(
@@ -65,9 +66,9 @@ def prepare_training_corpus(
         )
         q = q.join(rep, id_col, "left")
     lang = language_id(df, id_col, text_col).select(id_col, "pred_lang")
-    # narrow (id, score, pred_lang) metadata, CACHED: it is consumed twice
+    # narrow (id, score, pred_lang) metadata, PINNED: it is consumed twice
     # (the eligibility filter feeding dedup, then the final ledger join);
-    # the cache avoids recomputing the quality/language projections — cheap
+    # the pin avoids recomputing the quality/language projections — cheap
     # but corpus-sized — per consumer.  Deliberately excludes the text
     # column — at 100 TB the text
     # is the corpus; the gate columns are 3 scalars per doc.  LEFT join:
@@ -78,9 +79,11 @@ def prepare_training_corpus(
     meta_cols = [id_col, "score"]
     if max_dup_line_frac is not None:
         meta_cols.append("dup_line_frac")
-    meta = q.join(lang, id_col, "left").select(
-        *meta_cols, F.coalesce("pred_lang", F.lit("und")).alias("pred_lang")
-    ).cache()
+    meta = compute_once(
+        q.join(lang, id_col, "left").select(
+            *meta_cols, F.coalesce("pred_lang", F.lit("und")).alias("pred_lang")
+        )
+    )
 
     # null-safe gates: a NULL score (NULL text — length(NULL) poisons the
     # arithmetic) must read as a FAILED gate both in the eligibility filter
@@ -126,16 +129,10 @@ def prepare_training_corpus(
             "pred_lang",
         )
     )
-    # doc-grain scalar result: materialize so the meta cache can be
-    # retired — no internal cache outlives the call
+    # doc-grain result: materialize so the meta pin retires with the call
     # (SPARK_GRAFT_EAGER=0 keeps it lazy for the plan audit, per the
     # eager_results() convention every materialization point follows)
-    from graph_computing_go_spark.session import eager_results
-
-    if eager_results():
-        ledger = ledger.localCheckpoint()
-        meta.unpersist()
-    return ledger
+    return ledger.localCheckpoint() if eager_results() else ledger
 
 
 def compact_corpus(

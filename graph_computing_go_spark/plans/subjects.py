@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_computing_go_spark.functions.entropy import grouped_degree_entropy
-from graph_computing_go_spark.session import eager_results
+from graph_computing_go_spark.session import compute_once, eager_results
 
 
 def subject_entropy_lifecycle(
@@ -45,8 +45,9 @@ def subject_entropy_lifecycle(
     """(year, subject, n_vertices, n_edges, dd_h_in, se_h_in, n_in) per
     (year, subject).
 
-    ``vertices``: (id, year, subjects array<string>) — vertices with empty
-    subject lists never join a circle; ``edges``: (src, dst).
+    ``vertices``: (id, year, subjects array<string>) — a NULL element
+    names no subject, and vertices with no subject never join a circle;
+    ``edges``: (src, dst).
     """
     if not years:
         schema = (
@@ -80,9 +81,12 @@ def subject_entropy_lifecycle(
         "id", F.col("year").cast("int").alias("vy"), "subjects"
     ).filter(F.col("vy").isNotNull())
     # the circle is SUBJECT-CARRYING vertices only (the reference's circle
-    # is built from subject membership; empty/NULL subject lists never join)
-    vcirc = vy.filter(F.size("subjects") > 0).select("id", "vy")
-    tagged = (
+    # is built from subject membership; empty/NULL subject lists never
+    # join, and a NULL element names no subject)
+    vcirc = vy.filter(F.exists("subjects", lambda x: x.isNotNull())).select(
+        "id", "vy"
+    )
+    tagged = compute_once(
         edges.join(
             vcirc.select(F.col("id").alias("src"), F.col("vy").alias("ysrc")),
             "src",
@@ -92,8 +96,6 @@ def subject_entropy_lifecycle(
             "dst",
         )
         .select("src", "dst", F.greatest("ysrc", "ydst").alias("ymax"))
-        .repartition(n_part, "dst")
-        .cache()
     )
     # first year each vertex clears the in-degree gate (kept is monotone:
     # the in-circle in-degree only grows with the circle)
@@ -114,13 +116,20 @@ def subject_entropy_lifecycle(
         .groupBy("id")
         .agg(F.min("yr").alias("kyr"))
     )
-    # membership rows (duplicate subjects preserved) with kept-from year;
-    # probed by both sides of the subject routing AND the ledger fan-out
+    # membership rows (duplicate subjects preserved, NULL elements dropped)
+    # with kept-from year; probed by both sides of the subject routing AND
+    # the ledger fan-out.  The NULL filter and the repartition sit ABOVE
+    # the pin: a checkpoint reports no output partitioning under AQE, while
+    # an exchange above a checkpoint scan keeps its hash(id) layout and is
+    # reused by all three consumers of the one result query — provided
+    # their subtrees are alike, and the routing joins' inferred
+    # subject IS NOT NULL lands on exactly this filter
     ms = (
-        vy.select("id", F.explode("subjects").alias("subject"))
-        .join(kyr, "id")
+        compute_once(
+            vy.select("id", F.explode("subjects").alias("subject")).join(kyr, "id")
+        )
+        .filter(F.col("subject").isNotNull())
         .repartition(n_part, "id")
-        .cache()
     )
     # edge increment: contributes to (year, subject) from
     # y0 = max(enters-graph, src kept, dst kept) onward
@@ -191,10 +200,6 @@ def subject_entropy_lifecycle(
             F.coalesce("n_in", F.lit(0)).alias("n_in"),
         )
     )
-    # (year, subject)-grain result: materialize so the two internal caches
-    # retire with the call (SPARK_GRAFT_EAGER=0 keeps it lazy for the audit)
-    if eager_results():
-        out = out.localCheckpoint()
-        ms.unpersist()
-        tagged.unpersist()
-    return out
+    # (year, subject)-grain result: materialize so the two pins retire with
+    # the call (SPARK_GRAFT_EAGER=0 keeps it lazy for the audit)
+    return out.localCheckpoint() if eager_results() else out

@@ -58,17 +58,6 @@ def compute_once(df):
     return df.localCheckpoint(eager=False) if eager_results() else df
 
 
-def is_cached(df) -> bool:
-    """True when this plan is already persisted — i.e. the CALLER owns a
-    cache on it.  ``cache()``/``unpersist()`` act on the SHARED
-    canonicalized-plan entry (CLAUDE.md invariant), so an operator must
-    never adopt (and later evict) a caller-owned persistence: check this
-    before caching an input, and skip the paired unpersist when it's
-    preowned."""
-    lvl = df.storageLevel
-    return lvl.useMemory or lvl.useDisk
-
-
 def get_spark(
     app_name: str = "graph-computing-go-spark",
     master: str | None = None,

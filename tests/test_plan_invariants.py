@@ -211,11 +211,13 @@ def test_single_scan_expansions_have_no_union(spark):
 
 
 def test_grouped_distance_tag_joins_reuse_nc_partitioning(spark, monkeypatch):
-    """The node_cat cache is pre-partitioned on hash(group…, id) and probed
-    by BOTH tag joins through alias-aware output partitioning (PERF.md §13)
-    — its cached layout must carry a user-specified repartition on those
-    keys.  Checked on the lazy plan (SPARK_GRAFT_EAGER=0) so the audit sees
-    the full tree, same as tools/plandump.py."""
+    """Grouped distance complexity under a caller group key named ``g``:
+    no internal column may clash with it, and the tag joins shuffle on
+    hash(g, …).  (The node table is no longer pre-partitioned: under AQE a
+    checkpoint reports no output partitioning — see
+    test_tag_joins_shuffle_node_table_once_per_side.)  Checked on the lazy
+    plan (SPARK_GRAFT_EAGER=0) so the audit sees the full tree, same as
+    tools/plandump.py."""
     monkeypatch.setenv("SPARK_GRAFT_EAGER", "0")
     from graph_computing_go_spark.functions.distance_complexity import (
         distance_complexity,
@@ -232,14 +234,104 @@ def test_grouped_distance_tag_joins_reuse_nc_partitioning(spark, monkeypatch):
     out = distance_complexity(w, c, group=["g"], assume_canonical=True)
     plan = _plan(out)
     # the canonical-skip must hold: no dropDuplicates-style aggregate on
-    # (g, a, b) reintroduced upstream of the edge cache
+    # (g, a, b) reintroduced upstream of the edge pin
     assert "REPARTITION_BY_NUM" in plan or "hashpartitioning(g" in plan, plan
     row = out.collect()[0]
     assert round(row["big"], 9) == round(1.0754887502163468, 9)
-    # lazy mode (EAGER=0) skips the function's own unpersist hygiene, so its
-    # four internal caches would outlive this test in the shared session —
-    # drop them here (ADVICE r4)
-    spark.catalog.clearCache()
+
+
+def _names(attrs) -> set[str]:
+    it = attrs.iterator()
+    return {it.next().name() for _ in range(attrs.size())}
+
+
+def _node_pin_paths(jplan) -> list[list[str]]:
+    """For every join an executed plan ran that reads the category node
+    pin (a scan emitting ``__copies``) — the tag joins: the operators
+    between the join and that scan, followed through single-child
+    operators and into reused exchanges."""
+    from tools.plandump import _walk
+
+    paths = []
+
+    def visit(node, name):
+        if not name.endswith("JoinExec"):
+            return
+        it = node.children().iterator()
+        while it.hasNext():
+            n, path = it.next(), []
+            while True:
+                nm = n.getClass().getSimpleName()
+                path.append(nm)
+                if nm == "AdaptiveSparkPlanExec":
+                    n = n.executedPlan()
+                elif nm.endswith("QueryStageExec"):
+                    n = n.plan()
+                elif nm == "ReusedExchangeExec":
+                    n = n.child()
+                elif n.children().size() == 1:
+                    n = n.children().head()
+                else:
+                    break
+            if nm == "RDDScanExec" and "__copies" in _names(n.output()):
+                paths.append(path)
+
+    _walk(jplan, visit)
+    return paths
+
+
+def test_tag_joins_shuffle_node_table_once_per_side(spark, monkeypatch):
+    """Each tag join (the join that also fans an endpoint out over its
+    copies) shuffles the category node table at most once, never a second
+    time for a separate copy join.  Multilayer's two joins read the same
+    node columns, so the second reuses the first's exchange: ONE shuffle of
+    the node table.  Distance complexity's b-side needs no copy list, so
+    its narrower exchange runs on its own.  (The node pin cannot be
+    pre-partitioned instead: under AQE a checkpoint reports no output
+    partitioning.)  Broadcasts are off, so the joins are sort-merge joins
+    and the check cannot pass by a broadcast."""
+    from graph_computing_go_spark.functions import (
+        distance_complexity,
+        multilayer_structural_entropy,
+    )
+
+    w = spark.createDataFrame(
+        [(9, 2, 1, 1.0), (9, 3, 1, 2.0), (9, 3, 2, 1.0), (8, 3, 1, 1.0)],
+        "g int, a long, b long, distance double",
+    ).repartition(3)
+    c = spark.createDataFrame(
+        [(9, 1, ["x"]), (9, 2, ["x", "y"]), (9, 3, ["y"]), (8, 1, ["x"]), (8, 3, ["x"])],
+        "g int, id long, cats array<string>",
+    ).repartition(3)
+    v = c.filter(F.col("g") == 9).select("id", "cats")
+    e = w.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        for fn, shuffles in (
+            (lambda: distance_complexity(w, c, group=["g"], assume_canonical=True), 2),
+            (lambda: multilayer_structural_entropy(v, e), 1),
+        ):
+            plans = _run_plans(
+                monkeypatch, ("distance_complexity.py", "multilayer.py"), fn
+            )
+            paths = [p for plan in plans for p in _node_pin_paths(plan)]
+            # non-vacuous: both tag joins, each reading the pin
+            assert len(paths) == 2, paths
+            assert not any("Broadcast" in nm for p in paths for nm in p), paths
+            ran = [p for p in paths if "ReusedExchangeExec" not in p]
+            assert sum(p.count("ShuffleExchangeExec") for p in ran) == shuffles, paths
+    finally:
+        for k, val in prev.items():
+            if val is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, val)
 
 
 # --------------------------------------------------------------------------
@@ -309,20 +401,6 @@ def _run_plans(monkeypatch, module: str | tuple[str, ...], fn):
     return [d._jdf.queryExecution().executedPlan() for d in [*taken, out]]
 
 
-def _scans_with(jplan, column: str) -> int:
-    """Leaf scans in an executed plan's top-level final plan whose output
-    has ``column``.  The top-level initial plan starts at column 0; a
-    cached relation's own plan prints an indented one inside the final
-    plan."""
-    final = jplan.toString().split("\n+- == Initial Plan ==")[0]
-    return sum(
-        1
-        for ln in final.splitlines()
-        if ("InMemoryTableScan [" in ln or "Scan ExistingRDD[" in ln)
-        and f"{column}#" in ln.split("]")[0]
-    )
-
-
 def _assert_runs_once(plans):
     """No shuffle stage runs twice — within a query, nor across the queries
     of one call (a table two queries need is materialized once)."""
@@ -351,8 +429,9 @@ def test_entropy_cached_degrees_run_once(spark, monkeypatch):
 
 
 def test_multilayer_cached_inputs_run_once(spark, monkeypatch):
-    """The expanded graph and the tagged edge table feed two consumers
-    each; the module aggregates feed the tail once."""
+    """The node table feeds both tag joins (which also fan the copies
+    out); the expanded, tagged graph feeds big and ONE per-node
+    aggregation."""
     from graph_computing_go_spark.functions import multilayer_structural_entropy
 
     e = _cached_edges(spark)
@@ -373,8 +452,10 @@ def test_multilayer_cached_inputs_run_once(spark, monkeypatch):
 
 
 def test_distance_complexity_cached_inputs_run_once(spark, monkeypatch):
-    """tagged feeds the intra and cross aggregations; h_module and outer
-    each feed the tail once."""
+    """The exploded categories feed the max id, the copy ranking and the
+    node table; the node table feeds both tag joins; the tagged edge table
+    feeds big and ONE per-node aggregation.  The node table and the fold
+    live in multilayer.py, so its checkpoints count too."""
     from graph_computing_go_spark.functions import distance_complexity
 
     e = _cached_edges(spark)
@@ -390,15 +471,15 @@ def test_distance_complexity_cached_inputs_run_once(spark, monkeypatch):
     )
     plans = _run_plans(
         monkeypatch,
-        "distance_complexity.py",
+        ("distance_complexity.py", "multilayer.py"),
         lambda: distance_complexity(w, c, assume_canonical=True),
     )
     _assert_runs_once(plans)
-    # h_module's consumers prune it differently, so a second consumer would
-    # re-run its aggregation as a DIFFERENT exchange, which the check above
-    # cannot see: pin that the tail reads the tagged table once per
-    # aggregation (intra, cross) — a cached tagged table read four times
-    assert max(_scans_with(p, "cat_a") for p in plans) == 2
+    # the tagged edge table feeds big and the module terms; unpinned, each
+    # consumer would re-run the tag joins under a DIFFERENT pruning, which
+    # the check above cannot see: pin that the two tag joins (a-side,
+    # b-side) run once each
+    assert sum(len(_node_pin_paths(p)) for p in plans) == 2
     e.unpersist()
     w.unpersist()
 

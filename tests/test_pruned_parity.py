@@ -1,8 +1,10 @@
 """DuckDB parity for functions kept OUT of the 50-query driver registry
 (pruned per VERDICT r2 missing #2, or added after the registry was pinned):
-they stay fully oracle-checked here, just not driver-run.  Same compare
-discipline as tools/compare.py — sorted row-tuples after both engines apply
-identical rounding."""
+they stay fully oracle-checked here, just not driver-run — and for the
+registered queries over the shared category-module core, which only the
+manual tools/compare.py runs otherwise.  Same compare discipline as
+tools/compare.py — sorted row-tuples after both engines apply identical
+rounding."""
 
 from __future__ import annotations
 
@@ -13,6 +15,8 @@ import pytest
 
 from graph_computing_go_spark.api import (
     DEGREE_HISTOGRAM_ALL_SQL,
+    ORACLES,
+    QUERIES,
     DEGREE_HISTOGRAM_OUT_SQL,
     REVENUE_PER_NATION_SQL,
     SIMHASH_NEAR_DUP_SQL,
@@ -63,4 +67,17 @@ def duck():
 def test_pruned_query_matches_oracle(spark, duck, fn, sql):
     got = sorted(map(tuple, fn(spark, SF_DIR).collect()))
     want = sorted(map(tuple, duck.execute(sql).fetchall()))
+    assert got == want
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata missing")
+@pytest.mark.parametrize(
+    "name",
+    ["multilayer_entropy", "distance_complexity", "discipline_distance_complexity"],
+)
+def test_category_module_query_matches_oracle(spark, duck, name):
+    """The three registered callers of functions/multilayer.py's node
+    table, tag joins and little fold."""
+    got = sorted(map(tuple, QUERIES[name](spark, SF_DIR).collect()))
+    want = sorted(map(tuple, duck.execute(ORACLES[name]).fetchall()))
     assert got == want

@@ -15,7 +15,6 @@ from graph_computing_go_spark.operators.graph import (
     global_row_number,
     percent_ladder_stats,
 )
-from graph_computing_go_spark.session import is_cached
 
 
 def test_global_row_number_matches_sorted_order(spark):
@@ -183,7 +182,7 @@ def test_percent_ladder_matches_python(spark, percents, n_edges, cached):
     got = sorted(tuple(r) for r in percent_ladder_stats(edges, percents).collect())
     assert got == _ladder_python(rows, percents)
     if cached:
-        assert is_cached(edges)
+        assert edges.storageLevel.useMemory
         edges.unpersist()
 
 

@@ -219,3 +219,28 @@ def test_subject_lifecycle_matches_brute_force_on_random_graphs(spark):
                     assert math.isclose(gi, wi, abs_tol=2e-6), (
                         f"seed {seed}: {g} vs {w}"
                     )
+
+
+def test_subject_lifecycle_null_subject_is_no_subject(spark):
+    """A NULL element of a subject list names no subject: the lifecycle
+    equals the one over the same lists with the NULLs dropped."""
+    vrows = [
+        (1, 2000, ["a", None]),
+        (2, 2000, ["a"]),
+        (3, 2000, [None]),
+        (4, 2001, ["a", "b"]),
+        (5, 2001, ["b", None]),
+    ]
+    erows = [(1, 2), (2, 1), (3, 1), (4, 1), (5, 4), (4, 5), (1, 4), (2, 4)]
+    edges = spark.createDataFrame(erows, "src long, dst long")
+
+    def run(rows):
+        v = spark.createDataFrame(rows, "id long, year int, subjects array<string>")
+        return sorted(
+            tuple(r)
+            for r in subject_entropy_lifecycle(v, edges, [2000, 2001], 1).collect()
+        )
+
+    got = run(vrows)
+    assert got == run([(i, y, [s for s in subs if s]) for i, y, subs in vrows])
+    assert {r[1] for r in got} == {"a", "b"}

@@ -19,6 +19,10 @@ AUDIT_QUERIES = [
     "pricing_summary",
     "in_degree_count",
     "top_percent_slice",
+    # the category-module core (functions/multilayer.py) under its three
+    # callers
+    "multilayer_entropy",
+    "distance_complexity",
     "discipline_distance_complexity",
     "google_distance",
     "subject_entropy_lifecycle",
